@@ -909,13 +909,6 @@ def main() -> None:
         # stream each timing as its own line so a stdout-tail capture
         # keeps as many as fit even if the summary were ever lost
         print(json.dumps({"q": name, "sec": timings[name]}), flush=True)
-    # end-of-family drop for the graph family's shared edge relation
-    # (CACHE TABLE lifetime: built by its first consumer, freed here)
-    from bigdata_weather_system_spark.contract.graph_ops import (  # noqa: E402
-        clear_shared_edges,
-    )
-
-    clear_shared_edges()
     sent_end = _time_sentinels()
     sentinel = {
         s: round(min(sent_start[s], sent_end[s]), 4)

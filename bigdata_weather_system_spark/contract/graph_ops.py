@@ -55,11 +55,6 @@ def shared_copurchase_edges(
     return df.localCheckpoint(eager=True) if pinned else df
 
 
-def clear_shared_edges() -> None:
-    """No-op since the round-8 optimization pass (the cross-query edge
-    memo is gone); kept so the bench/parity/scale sweep hygiene call
-    sites stay valid."""
-
 _PR_STEP = """
     r{k} AS (
       SELECT e.dst AS src,

@@ -630,12 +630,6 @@ def cosine_topk_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("query_id", "neighbor_id", "cosine_sim")
 
 
-def clear_bpe_trains() -> None:
-    """No-op since the round-8 optimization pass: BPE trains are no
-    longer memoized across query invocations (kept so existing sweep
-    hygiene call sites stay valid)."""
-
-
 def _shared_bpe_train(spark: SparkSession, sf_dir: str, n_merges: int = 8):
     """Run the BPE train for one query invocation.
 
@@ -825,12 +819,6 @@ def _table_fingerprint(sf_dir: str, table: str) -> tuple:
         )
     except OSError:
         return ()
-
-
-def clear_pq_codebooks() -> None:
-    """No-op since the round-8 optimization pass: PQ codebooks are no
-    longer memoized across query invocations (kept so existing call
-    sites stay valid)."""
 
 
 def _shared_pq_codebooks(

@@ -88,11 +88,9 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE distributed pass computes the d(d+1)/2 moment sums
     (each vector emits its upper-triangle outer product via nested
     array transforms, JVM-side); everything after lives on d^2 = 4096
-    rows regardless of corpus size. The fixed 8-round matvec/normalize
-    recurrence runs as chained joins with a per-round lineage cut
-    (64-row ``localCheckpoint``, the ALS idiom — a lazy chain would
-    double the logical plan every round). No driver-side linear
-    algebra: the eigenvector never leaves the cluster. Covariance
+    rows regardless of corpus size, so the builder collects that
+    matrix and runs the fixed 8-round matvec/normalize recurrence on
+    the driver (``power_iteration_top_component``). Covariance
     entries round to 9 decimals so both
     engines iterate from bit-identical matrices; loadings round to 4
     with a deterministic sign convention (largest-|loading| coordinate

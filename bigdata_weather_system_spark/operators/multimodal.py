@@ -1,17 +1,28 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary + metadata.
+"""Multimodal column plumbing: image/audio/video as binary content + metadata.
 
-The engine treats media as ``binary`` content columns with a typed metadata
-struct, processed by Arrow-batched ``mapInPandas`` stages. Codec tiers:
+A media table holds one blob per row: ``media_id``, ``modality``
+(image|audio|video), ``mime_type``, the ``content`` bytes and
+``byte_len``. Every codec is real and written here with the standard
+library and numpy only:
 
-- REAL, no external libs: the engine's own RAW container (images/video
-  frames) and PCM blocks, plus the STANDARD formats 24-bit BMP and
-  RIFF/WAVE PCM16 (pure ``struct`` parsing — byte-exact with any other
-  reader; see ``encode_bmp``/``decode_wav`` below).
-- Env-gated: compressed formats (PNG/JPEG/MP4) need PIL/ffmpeg, which are
-  NOT in this container — those paths fail loudly via ``require_codec`` /
-  are deterministic fakes, clearly marked. Everything Spark-side is real
-  and tested either way: schemas, batch iteration, partition sizing, UDF
-  signatures.
+- uncompressed: the engine's own RAW container (image and video frames)
+  and RAW PCM blocks, 24-bit BMP and RIFF/WAVE PCM16;
+- compressed: PNG (zlib + all five scanline filters), baseline JPEG
+  (DCT + Huffman), MJPEG-in-AVI, IMA ADPCM in WAV, animated GIF (LZW +
+  inter-frame composition), and two toy codecs, MPV1 (motion-compensated
+  video) and MPA1 (subband audio with dynamic bit allocation).
+
+Bitstream formats that need an external codec library (H.264, MP3/OGG)
+are not implemented.
+
+Every per-row kernel crosses the Python boundary through ``_row_map``:
+one Arrow-batched ``mapInPandas`` stage whose output columns are named
+once, in the schema. Each ``fabricate_*`` builds deterministic blobs from
+an id column through ``_fabricate``. A decoder never raises on bad bytes;
+it returns None, and its wrapper either skips the row or, for
+``decode_raw_features``, ``resize_raw_images``, ``decode_pcm_features``,
+``resample_pcm`` and ``pcm_bin_energy``, emits the row with every computed
+value null.
 
 Scale notes:
 - media bytes never pass through Python row-at-a-time: ``mapInPandas``
@@ -24,8 +35,9 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .similarity import _spread
@@ -49,48 +61,66 @@ def _fan_out(ids: DataFrame, heavy: bool) -> DataFrame:
     return _spread(ids) if heavy else ids
 
 
-#: Typed metadata carried alongside every media blob.
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("modality", T.StringType(), False),  # image|audio|video
-        T.StructField("mime_type", T.StringType(), True),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("byte_len", T.LongType(), True),
-    ]
-)
+def _row_map(df: DataFrame, cols: list[str], schema: str, row_fn) -> DataFrame:
+    """Run ``row_fn(*values)`` on every row of ``df``'s ``cols`` in one
+    Arrow-batched ``mapInPandas`` stage. ``row_fn`` yields 0..n tuples in
+    ``schema`` order (yielding none drops the row); each Arrow batch
+    becomes one pandas frame whose column names come from ``schema``."""
+    struct = T.StructType.fromDDL(schema)
+    names = struct.fieldNames()
 
-IMAGE_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("byte_len", T.LongType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("feature", T.ArrayType(T.FloatType()), True),
-    ]
-)
+    def batches(it):
+        import pandas as pd
 
-FRAME_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame_bytes", T.BinaryType(), True),
-    ]
-)
+        for pdf in it:
+            rows = [
+                out
+                for vals in zip(*(pdf[c] for c in cols))
+                for out in row_fn(*vals)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(batches, schema=struct)
 
 
-def require_codec(name: str):
-    """Import a media codec library or fail loudly — decode kernels are
-    stubbed in this container (no PIL/librosa/ffmpeg installed)."""
-    import importlib
+#: (id, blob) output of every fabricate and binary→binary transform.
+_BLOB_SCHEMA = "media_id long, content binary"
 
-    try:
-        return importlib.import_module(name)
-    except ImportError as exc:  # pragma: no cover
-        raise NotImplementedError(
-            f"media codec '{name}' is not available in this environment; "
-            "the Spark plumbing is real but the decode kernel is stubbed"
-        ) from exc
+
+def _as_media(blobs: DataFrame, modality: str, mime: str) -> DataFrame:
+    """(media_id, content) rows → the media table shape."""
+    return blobs.select(
+        "media_id",
+        F.lit(modality).alias("modality"),
+        F.lit(mime).alias("mime_type"),
+        "content",
+        F.octet_length("content").cast("long").alias("byte_len"),
+    )
+
+
+def _fabricate(
+    df: DataFrame, id_col: str, encode, modality: str, mime: str, heavy: bool
+) -> DataFrame:
+    """Media table with one ``encode(id)`` blob per id of ``df[id_col]``;
+    ``heavy`` picks the front-end partitioning (``_fan_out``)."""
+
+    def row(mid):
+        mid = int(mid)
+        yield mid, encode(mid)
+
+    ids = _fan_out(df.select(id_col), heavy)
+    return _as_media(_row_map(ids, [id_col], _BLOB_SCHEMA, row), modality, mime)
+
+
+def _ramp_rgb(mid: int, shift: int = 0):
+    """(h, w, 3) uint8 frame of the BMP/PNG/JPEG/AVI family ramp:
+    h = 8 + id%8, w = 8 + id%12, B = v % 256, G = (v+85) % 256,
+    R = (v+170) % 256 with v = id + shift + r*w + c."""
+    h, w = 8 + mid % 8, 8 + mid % 12
+    v = (mid + shift + np.arange(h * w, dtype=np.int64)).reshape(h, w)
+    return np.stack(
+        [(v + 170) % 256, (v + 85) % 256, v % 256], axis=-1
+    ).astype(np.uint8)
 
 
 def to_media_table(
@@ -108,76 +138,6 @@ def to_media_table(
     )
 
 
-def decode_image_features(media: DataFrame, use_real_codec: bool = False) -> DataFrame:
-    """Arrow-batched image decode → (dims, feature vector).
-
-    With ``use_real_codec`` this would call PIL inside the batch loop; here
-    the decode is a DETERMINISTIC FAKE (derived from the bytes) so the
-    pipeline — batch iteration, schema, partition behavior — runs for real.
-    """
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        if use_real_codec:
-            require_codec("PIL.Image")  # raises NotImplementedError here
-        for pdf in it:
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "byte_len": pdf["byte_len"],
-                }
-            )
-            # fake decode: dims derived deterministically from content size.
-            # byte_len is nullable — a null row makes the pandas column
-            # float64 with NaN, which .astype("int32") rejects; treat null
-            # as 0 bytes (matching the `c or b""` content fallback below)
-            blen = pdf["byte_len"].fillna(0)
-            out["width"] = (blen % 640 + 16).astype("int32")
-            out["height"] = (blen % 480 + 16).astype("int32")
-            out["feature"] = [
-                np.frombuffer(
-                    (bytes(c or b"") + b"\x00" * 16)[:16], dtype=np.uint8
-                ).astype("float32")
-                / 255.0
-                for c in pdf["content"]
-            ]
-            yield out
-
-    return media.mapInPandas(batches, schema=IMAGE_FEATURE_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_n_bytes: int = 64, max_frames: int = 8) -> DataFrame:
-    """Frame sampling stub: emits one 'frame' per byte-stride chunk (a real
-    implementation strides video frames via ffmpeg; the Spark shape — one
-    input row fanning out to N output rows through mapInPandas — is what
-    matters and is real)."""
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                blob = bytes(content or b"")
-                # ceil division: the partial tail chunk is a frame too
-                n_frames = max(1, -(-len(blob) // every_n_bytes))
-                for i in range(min(max_frames, n_frames)):
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": i,
-                            "frame_bytes": blob[
-                                i * every_n_bytes : (i + 1) * every_n_bytes
-                            ],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame_bytes"])
-
-    return media.mapInPandas(batches, schema=FRAME_SAMPLE_SCHEMA)
-
-
 def decode_image_histogram_features(media: DataFrame, bins: int = 16) -> DataFrame:
     """REAL image decode → feature extraction: inflate + un-filter the
     PNG blob (``decode_png``), then bin the blue channel into a
@@ -188,34 +148,19 @@ def decode_image_histogram_features(media: DataFrame, bins: int = 16) -> DataFra
     value of the fabricated family, making every bin count an exact
     integer the oracle recomputes. Undecodable blobs are skipped (None,
     never wrong pixels)."""
-    schema = "media_id long, width int, height int, feature array<double>"
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(mid, content):
+        arr = decode_png(content)
+        if arr is None:
+            return
+        h, w, _ = arr.shape
+        hist = np.bincount(arr[:, :, 2].ravel() // (256 // bins), minlength=bins)
+        yield int(mid), w, h, (hist / float(h * w)).astype(np.float64)
 
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                arr = decode_png(content)
-                if arr is None:
-                    continue
-                h, w, _ = arr.shape
-                blue = arr[:, :, 2].ravel()
-                hist = np.bincount(blue // (256 // bins), minlength=bins)
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "width": w,
-                        "height": h,
-                        "feature": (hist / float(h * w)).astype(np.float64),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "feature"]
-            )
-
-    return media.mapInPandas(batches, schema=schema)
+    return _row_map(
+        media, ["media_id", "content"],
+        "media_id long, width int, height int, feature array<double>", row,
+    )
 
 
 def sample_video_frames(
@@ -229,44 +174,24 @@ def sample_video_frames(
     row fans out to ≤ ``max_frames`` frame rows; ``frame_len`` is the
     byte size of the decoded 8-bit frame and ``pixel_sum`` its exact
     palette-mapped sum (lossless codec → integer-exact oracle)."""
-    schema = (
+
+    def row(mid, content):
+        dec = decode_gif(content)
+        if dec is None:
+            return
+        palette, frames = dec
+        red = palette[:, 0].astype(np.int64)
+        for fi in list(range(0, len(frames), stride))[:max_frames]:
+            fr = frames[fi]
+            h, w = fr.shape
+            yield int(mid), fi, w, h, int(h * w), int(red[fr].sum())
+
+    return _row_map(
+        media, ["media_id", "content"],
         "media_id long, frame_idx int, width int, height int, "
-        "frame_len long, pixel_sum long"
+        "frame_len long, pixel_sum long",
+        row,
     )
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                dec = decode_gif(content)
-                if dec is None:
-                    continue
-                palette, frames = dec
-                red = palette[:, 0].astype(np.int64)
-                for fi in list(range(0, len(frames), stride))[:max_frames]:
-                    fr = frames[fi]
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "frame_idx": fi,
-                            "width": fr.shape[1],
-                            "height": fr.shape[0],
-                            "frame_len": int(fr.shape[0] * fr.shape[1]),
-                            "pixel_sum": int(red[fr].sum()),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "frame_len", "pixel_sum",
-                ],
-            )
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -434,31 +359,12 @@ def fabricate_mpa_media(df: DataFrame, id_col: str) -> DataFrame:
     genuinely flips between (5,3) and (3,5) across the corpus and the
     shifts span 0–5 (verified in tests)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def encode(mid):
+        return encode_mpa(
+            (mid + (mid % 9 + 1) * np.arange(64, dtype=np.int64) ** 2) % 256
+        )
 
-        for pdf in it:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                xs = (
-                    mid
-                    + (mid % 9 + 1) * np.arange(64, dtype=np.int64) ** 2
-                ) % 256
-                rows.append({"media_id": mid, "content": encode_mpa(xs)})
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    fabricated = _fan_out(df.select(F.col(id_col)), heavy=False).mapInPandas(
-        batches, schema="media_id long, content binary"
-    )
-    return fabricated.select(
-        "media_id",
-        F.lit("audio").alias("modality"),
-        F.lit("audio/x-mpa1").alias("mime_type"),
-        "content",
-        F.octet_length("content").cast("long").alias("byte_len"),
-    )
+    return _fabricate(df, id_col, encode, "audio", "audio/x-mpa1", heavy=False)
 
 
 def decode_mpa_features(media: DataFrame) -> DataFrame:
@@ -466,46 +372,23 @@ def decode_mpa_features(media: DataFrame) -> DataFrame:
     allocation the encoder chose (bits/shift per detail band — the
     dynamic-allocation evidence), the exact decoded sample sum (integer
     lifting → integer-exact), and the frame's wire size."""
-    schema = (
+
+    def row(mid, content):
+        dec = decode_mpa(content)
+        if dec is None:
+            return
+        n_frames, samples, metas = dec
+        for fi in range(n_frames):
+            b2, b1, sh2, sh1, fbytes = metas[fi]
+            total = int(samples[fi * 32 : (fi + 1) * 32].sum())
+            yield int(mid), fi, b2, b1, sh2, sh1, total, fbytes
+
+    return _row_map(
+        media, ["media_id", "content"],
         "media_id long, frame_idx int, bits_d2 int, bits_d1 int, "
-        "shift_d2 int, shift_d1 int, decoded_sum long, frame_bytes int"
+        "shift_d2 int, shift_d1 int, decoded_sum long, frame_bytes int",
+        row,
     )
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                dec = decode_mpa(content)
-                if dec is None:
-                    continue
-                n_frames, samples, metas = dec
-                for fi in range(n_frames):
-                    b2, b1, sh2, sh1, fbytes = metas[fi]
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "frame_idx": fi,
-                            "bits_d2": b2,
-                            "bits_d1": b1,
-                            "shift_d2": sh2,
-                            "shift_d1": sh1,
-                            "decoded_sum": int(
-                                samples[fi * 32 : (fi + 1) * 32].sum()
-                            ),
-                            "frame_bytes": fbytes,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "bits_d2", "bits_d1",
-                    "shift_d2", "shift_d1", "decoded_sum", "frame_bytes",
-                ],
-            )
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 def media_metadata_summary(media: DataFrame) -> DataFrame:
@@ -522,10 +405,7 @@ def media_metadata_summary(media: DataFrame) -> DataFrame:
 # RAW bitmap codec — a REAL decode path (pure numpy, no external codecs)
 # ---------------------------------------------------------------------------
 #
-# Real-world compressed bitstreams (MP3/H.264) stay gated behind
-# ``require_codec`` (library-bound); JPEG/PNG/GIF/ADPCM/MPV1 decode from
-# scratch below;
-# uncompressed RAW frames need only numpy, so this path decodes actual
+# Uncompressed RAW frames need only numpy, so this path decodes actual
 # bytes end-to-end: header parse → pixel buffer → feature math / resize /
 # frame striding. Container format (big-endian, 12-byte header):
 #
@@ -535,8 +415,7 @@ def media_metadata_summary(media: DataFrame) -> DataFrame:
 #   bytes 10-11 n_frames (uint16, 1 = still image)
 #   bytes 12+   n_frames × h × w × c uint8 pixels, frame-major
 #
-# This mirrors how real pipelines handle raw sensor/decoded-tensor data;
-# swap the kernel for PIL/ffmpeg when the container has them.
+# This mirrors how real pipelines handle raw sensor/decoded-tensor data.
 
 RAW_MAGIC = b"RAWB"
 RAW_HEADER_LEN = 12
@@ -585,34 +464,17 @@ def fabricate_raw_media(df: DataFrame, id_col: str, video: bool = False) -> Data
     The closed-form pixel ramp is what lets a SQL oracle predict decoded
     statistics exactly."""
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def encode(mid):
+        h, w, c = 16 + mid % 16, 16 + mid % 24, 3
+        f = (2 + mid % 4) if video else 1
+        pix = ((mid + np.arange(f * h * w * c, dtype=np.int64)) % 256).astype(
+            np.uint8
+        ).reshape(f, h, w, c)
+        return encode_raw_blob(pix, f)
 
-        for pdf in it:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                h, w, c = 16 + mid % 16, 16 + mid % 24, 3
-                f = (2 + mid % 4) if video else 1
-                n = f * h * w * c
-                pix = ((mid + np.arange(n, dtype=np.int64)) % 256).astype(
-                    np.uint8
-                ).reshape(f, h, w, c)
-                rows.append(
-                    {"media_id": mid, "content": encode_raw_blob(pix, f)}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    fabricated = _fan_out(df.select(F.col(id_col)), heavy=True).mapInPandas(
-        batches, schema="media_id long, content binary"
-    )
-    return fabricated.select(
-        "media_id",
-        F.lit("video" if video else "image").alias("modality"),
-        F.lit("application/x-raw").alias("mime_type"),
-        "content",
-        F.octet_length("content").cast("long").alias("byte_len"),
+    return _fabricate(
+        df, id_col, encode, "video" if video else "image",
+        "application/x-raw", heavy=True,
     )
 
 
@@ -621,64 +483,26 @@ def decode_raw_features(media: DataFrame) -> DataFrame:
     brightness and per-channel means from the actual pixel buffer.
     Malformed blobs yield null dims/stats (the error-row pattern)."""
 
-    schema = (
+    def row(mid, content):
+        arr = decode_raw_blob(content)
+        if arr is None:
+            yield (mid,) + (None,) * 6
+            return
+        f, h, w, c = arr.shape
+        flat = arr.astype(np.float64)
+        # uint8 sums are exact in float64 (< 2^53), so the mean is
+        # bit-reproducible — no rounding needed for cross-engine comparison
+        yield (
+            mid, w, h, c, int(f * h * w * c), float(flat.mean()),
+            [float(m) for m in flat.mean(axis=(0, 1, 2))],
+        )
+
+    return _row_map(
+        media, ["media_id", "content"],
         "media_id long, width long, height long, channels long, "
-        "n_pixels long, mean_brightness double, channel_means array<double>"
+        "n_pixels long, mean_brightness double, channel_means array<double>",
+        row,
     )
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                arr = decode_raw_blob(content)
-                if arr is None:
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "width": None,
-                            "height": None,
-                            "channels": None,
-                            "n_pixels": None,
-                            "mean_brightness": None,
-                            "channel_means": None,
-                        }
-                    )
-                    continue
-                f, h, w, c = arr.shape
-                flat = arr.astype(np.float64)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": w,
-                        "height": h,
-                        "channels": c,
-                        # uint8 sums are exact in float64 (< 2^53), so the
-                        # mean is bit-reproducible — no rounding needed for
-                        # cross-engine comparison
-                        "n_pixels": int(f * h * w * c),
-                        "mean_brightness": float(flat.mean()),
-                        "channel_means": [
-                            float(m) for m in flat.mean(axis=(0, 1, 2))
-                        ],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "width",
-                    "height",
-                    "channels",
-                    "n_pixels",
-                    "mean_brightness",
-                    "channel_means",
-                ],
-            )
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 def resize_raw_images(media: DataFrame, out_h: int, out_w: int) -> DataFrame:
@@ -686,36 +510,18 @@ def resize_raw_images(media: DataFrame, out_h: int, out_w: int) -> DataFrame:
     array, re-encoded into the RAW container — a binary→binary media
     transform with verifiable output dims."""
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(mid, content):
+        arr = decode_raw_blob(content)
+        if arr is None:
+            yield mid, None
+            return
+        f, h, w, c = arr.shape
+        yi = (np.arange(out_h) * h // out_h).clip(0, h - 1)
+        xi = (np.arange(out_w) * w // out_w).clip(0, w - 1)
+        yield mid, encode_raw_blob(arr[:, yi[:, None], xi[None, :], :], f)
 
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                arr = decode_raw_blob(content)
-                if arr is None:
-                    rows.append({"media_id": mid, "content": None})
-                    continue
-                f, h, w, c = arr.shape
-                yi = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-                xi = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-                resized = arr[:, yi[:, None], xi[None, :], :]
-                rows.append(
-                    {"media_id": mid, "content": encode_raw_blob(resized, f)}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    out = media.select("media_id", "content").mapInPandas(
-        batches, schema="media_id long, content binary"
-    )
-    return out.select(
-        "media_id",
-        F.lit("image").alias("modality"),
-        F.lit("application/x-raw").alias("mime_type"),
-        "content",
-        F.octet_length("content").cast("long").alias("byte_len"),
-    )
+    out = _row_map(media, ["media_id", "content"], _BLOB_SCHEMA, row)
+    return _as_media(out, "image", "application/x-raw")
 
 
 def sample_raw_frames(media: DataFrame, stride: int = 2) -> DataFrame:
@@ -723,29 +529,17 @@ def sample_raw_frames(media: DataFrame, stride: int = 2) -> DataFrame:
     ``stride``-th frame, emit each as a standalone single-frame RAW image
     blob (one row in → n rows out through Arrow batches)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def row(mid, content):
+        arr = decode_raw_blob(content)
+        if arr is None:
+            return
+        for idx in range(0, arr.shape[0], stride):
+            yield mid, idx, encode_raw_blob(arr[idx], 1)
 
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                arr = decode_raw_blob(content)
-                if arr is None:
-                    continue
-                for idx in range(0, arr.shape[0], stride):
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": idx,
-                            "frame_bytes": encode_raw_blob(arr[idx], 1),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "frame_bytes"]
-            )
-
-    return media.select("media_id", "content").mapInPandas(
-        batches, schema=FRAME_SAMPLE_SCHEMA
+    return _row_map(
+        media, ["media_id", "content"],
+        "media_id long not null, frame_idx int not null, frame_bytes binary",
+        row,
     )
 
 
@@ -753,9 +547,8 @@ def sample_raw_frames(media: DataFrame, stride: int = 2) -> DataFrame:
 # RAW PCM audio codec — a REAL decode path (pure numpy, no external codecs)
 # ---------------------------------------------------------------------------
 #
-# The audio twin of the RAW bitmap codec above (round-2 verdict, Next #6):
-# compressed audio (MP3/OGG) stays gated behind ``require_codec``, but
-# uncompressed PCM needs only numpy, so this path decodes actual bytes
+# The audio twin of the RAW bitmap codec above: uncompressed PCM needs
+# only numpy, so this path decodes actual bytes
 # end-to-end: header parse → int16 sample buffer → waveform stats /
 # decimation resample. Container format (big-endian, 12-byte header):
 #
@@ -810,36 +603,12 @@ def fabricate_pcm_media(df: DataFrame, id_col: str) -> DataFrame:
     SQL oracle regenerate every sample with ``range()`` and predict the
     decoded waveform statistics exactly."""
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def encode(mid):
+        i = np.arange(256 + mid % 512, dtype=np.int64)
+        samples = ((mid * 7 + i * 3) % 2001 - 1000).astype(np.int16)
+        return encode_pcm_blob(samples, 8000 + (mid % 4) * 4000, 1)
 
-        for pdf in it:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                n = 256 + mid % 512
-                rate = 8000 + (mid % 4) * 4000
-                i = np.arange(n, dtype=np.int64)
-                samples = ((mid * 7 + i * 3) % 2001 - 1000).astype(np.int16)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "content": encode_pcm_blob(samples, rate, 1),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    fabricated = _fan_out(df.select(F.col(id_col)), heavy=False).mapInPandas(
-        batches, schema="media_id long, content binary"
-    )
-    return fabricated.select(
-        "media_id",
-        F.lit("audio").alias("modality"),
-        F.lit("audio/x-raw-pcm").alias("mime_type"),
-        "content",
-        F.octet_length("content").cast("long").alias("byte_len"),
-    )
+    return _fabricate(df, id_col, encode, "audio", "audio/x-raw-pcm", heavy=False)
 
 
 def decode_pcm_features(media: DataFrame) -> DataFrame:
@@ -849,74 +618,28 @@ def decode_pcm_features(media: DataFrame) -> DataFrame:
     exact integers, so every value is bit-reproducible in a SQL oracle.
     Malformed blobs yield null stats (the error-row pattern)."""
 
-    schema = (
+    def row(mid, content):
+        dec = decode_pcm_blob(content)
+        if dec is None:
+            yield (mid,) + (None,) * 9
+            return
+        rate, frames = dec
+        x = frames.astype(np.int64)
+        n = int(x.shape[0])
+        s = int(x.sum())
+        yield (
+            mid, rate, int(x.shape[1]), n, float(n) / float(rate),
+            float(s) / float(x.size), int(x.min()), int(x.max()), s,
+            int((x * x).sum()),
+        )
+
+    return _row_map(
+        media, ["media_id", "content"],
         "media_id long, sample_rate long, n_channels long, n_samples long, "
         "duration_s double, mean_amplitude double, min_amplitude long, "
-        "max_amplitude long, sum_amplitude long, sum_sq long"
+        "max_amplitude long, sum_amplitude long, sum_sq long",
+        row,
     )
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                dec = decode_pcm_blob(content)
-                if dec is None:
-                    rows.append(
-                        dict.fromkeys(
-                            [
-                                "sample_rate",
-                                "n_channels",
-                                "n_samples",
-                                "duration_s",
-                                "mean_amplitude",
-                                "min_amplitude",
-                                "max_amplitude",
-                                "sum_amplitude",
-                                "sum_sq",
-                            ],
-                            None,
-                        )
-                        | {"media_id": mid}
-                    )
-                    continue
-                rate, frames = dec
-                x = frames.astype(np.int64)
-                n = int(x.shape[0])
-                s = int(x.sum())
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "sample_rate": rate,
-                        "n_channels": int(x.shape[1]),
-                        "n_samples": n,
-                        "duration_s": float(n) / float(rate),
-                        "mean_amplitude": float(s) / float(x.size),
-                        "min_amplitude": int(x.min()),
-                        "max_amplitude": int(x.max()),
-                        "sum_amplitude": s,
-                        "sum_sq": int((x * x).sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "sample_rate",
-                    "n_channels",
-                    "n_samples",
-                    "duration_s",
-                    "mean_amplitude",
-                    "min_amplitude",
-                    "max_amplitude",
-                    "sum_amplitude",
-                    "sum_sq",
-                ],
-            )
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 def resample_pcm(media: DataFrame, factor: int = 2) -> DataFrame:
@@ -927,39 +650,18 @@ def resample_pcm(media: DataFrame, factor: int = 2) -> DataFrame:
     needs a filter kernel — out of scope for the codec-free container;
     the Spark shape is identical.)"""
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def row(mid, content):
+        dec = decode_pcm_blob(content)
+        if dec is None:
+            yield mid, None
+            return
+        rate, frames = dec
+        yield mid, encode_pcm_blob(
+            frames[::factor], max(1, rate // factor), frames.shape[1]
+        )
 
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                dec = decode_pcm_blob(content)
-                if dec is None:
-                    rows.append({"media_id": mid, "content": None})
-                    continue
-                rate, frames = dec
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "content": encode_pcm_blob(
-                            frames[::factor],
-                            max(1, rate // factor),
-                            frames.shape[1],
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    out = media.select("media_id", "content").mapInPandas(
-        batches, schema="media_id long, content binary"
-    )
-    return out.select(
-        "media_id",
-        F.lit("audio").alias("modality"),
-        F.lit("audio/x-raw-pcm").alias("mime_type"),
-        "content",
-        F.octet_length("content").cast("long").alias("byte_len"),
-    )
+    out = _row_map(media, ["media_id", "content"], _BLOB_SCHEMA, row)
+    return _as_media(out, "audio", "audio/x-raw-pcm")
 
 
 def pcm_bin_energy(media: DataFrame, k: int = 8) -> DataFrame:
@@ -977,57 +679,29 @@ def pcm_bin_energy(media: DataFrame, k: int = 8) -> DataFrame:
 
     Malformed blobs yield null features (the error-row pattern).
     """
-    schema = (
+
+    def row(mid, content):
+        dec = decode_pcm_blob(content)
+        if dec is None:
+            yield (int(mid),) + (None,) * 5
+            return
+        rate, frames = dec
+        x = frames[:, 0].astype(np.float64)
+        n = x.size
+        ang = 2.0 * np.pi * k * np.arange(n, dtype=np.float64) / n
+        re = float(np.dot(x, np.cos(ang)))
+        im = float(-np.dot(x, np.sin(ang)))
+        yield (
+            int(mid), n, int(rate), round(re, 3), round(im, 3),
+            round((re * re + im * im) ** 0.5 / n, 4),
+        )
+
+    return _row_map(
+        media, ["media_id", "content"],
         "media_id long, n_samples long, sample_rate long, "
-        "re_bin double, im_bin double, mag_bin double"
+        "re_bin double, im_bin double, mag_bin double",
+        row,
     )
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                dec = decode_pcm_blob(content)
-                if dec is None:
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "n_samples": None,
-                            "sample_rate": None,
-                            "re_bin": None,
-                            "im_bin": None,
-                            "mag_bin": None,
-                        }
-                    )
-                    continue
-                rate, frames = dec
-                x = frames[:, 0].astype(np.float64)
-                n = x.size
-                i = np.arange(n, dtype=np.float64)
-                ang = 2.0 * np.pi * k * i / n
-                re = float(np.dot(x, np.cos(ang)))
-                im = float(-np.dot(x, np.sin(ang)))
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "n_samples": n,
-                        "sample_rate": int(rate),
-                        "re_bin": round(re, 3),
-                        "im_bin": round(im, 3),
-                        "mag_bin": round((re * re + im * im) ** 0.5 / n, 4),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_samples", "sample_rate",
-                    "re_bin", "im_bin", "mag_bin",
-                ],
-            )
-
-    return media.select("media_id", "content").mapInPandas(batches, schema=schema)
 
 
 def motion_energy_raw(media: DataFrame) -> DataFrame:
@@ -1045,44 +719,23 @@ def motion_energy_raw(media: DataFrame) -> DataFrame:
     (the error-row pattern: auditing is `media_metadata_summary`'s job).
     """
 
-    schema = (
-        "media_id long, pair_idx long, n_pixels long, "
-        "mean_abs_diff double"
-    )
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                arr = decode_raw_blob(content)
-                if arr is None or arr.shape[0] < 2:
-                    continue
-                f = arr.shape[0]
-                flat = arr.reshape(f, -1).astype(np.int32)
-                diffs = np.abs(flat[1:] - flat[:-1])
-                for j in range(f - 1):
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "pair_idx": j,
-                            "n_pixels": int(diffs.shape[1]),
-                            "mean_abs_diff": float(
-                                diffs[j].astype(np.float64).mean()
-                            ),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "pair_idx", "n_pixels", "mean_abs_diff",
-                ],
+    def row(mid, content):
+        arr = decode_raw_blob(content)
+        if arr is None or arr.shape[0] < 2:
+            return
+        f = arr.shape[0]
+        flat = arr.reshape(f, -1).astype(np.int32)
+        diffs = np.abs(flat[1:] - flat[:-1])
+        for j in range(f - 1):
+            yield (
+                int(mid), j, int(diffs.shape[1]),
+                float(diffs[j].astype(np.float64).mean()),
             )
 
-    return media.select("media_id", "content").mapInPandas(
-        batches, schema=schema
+    return _row_map(
+        media, ["media_id", "content"],
+        "media_id long, pair_idx long, n_pixels long, mean_abs_diff double",
+        row,
     )
 
 
@@ -1102,57 +755,39 @@ def ahash_raw_images(media: DataFrame) -> DataFrame:
     64-term sum. Cells are assigned by ``min(7, r*8//h)`` so any
     aspect ratio partitions identically in numpy and SQL."""
 
-    schema = (
-        "media_id long, w1 long, w2 long, "
-        + ", ".join(f"band{b} long" for b in range(8))
-    )
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for pdf in it:
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                arr = decode_raw_blob(content)
-                if arr is None:
-                    continue
-                f, h, w, c = arr.shape
-                gs = arr[0].astype(np.int64).sum(axis=2)  # integer grays
-                r_idx = np.minimum(7, np.arange(h)[:, None] * 8 // h)
-                c_idx = np.minimum(7, np.arange(w)[None, :] * 8 // w)
-                cell_sum = np.zeros((8, 8), dtype=np.int64)
-                cell_n = np.zeros((8, 8), dtype=np.int64)
-                rr = np.broadcast_to(r_idx, (h, w))
-                cc = np.broadcast_to(c_idx, (h, w))
-                np.add.at(cell_sum, (rr, cc), gs)
-                np.add.at(cell_n, (rr, cc), 1)
-                gm = 0.0
-                cm = cell_sum / cell_n  # exact divisions
-                for i in range(8):
-                    for j in range(8):
-                        gm += cm[i, j]  # fixed (i, j) fold order
-                gm /= 64.0
-                bits = (cm > gm).astype(np.int64).reshape(64)
-                w1 = int((bits[:32] << np.arange(32)).sum())
-                w2 = int((bits[32:] << np.arange(32)).sum())
-                bands = [
-                    int((bits[8 * b: 8 * b + 8] << np.arange(8)).sum())
-                    for b in range(8)
-                ]
-                row = {"media_id": int(mid), "w1": w1, "w2": w2}
-                row.update({f"band{b}": bands[b] for b in range(8)})
-                rows.append(row)
-        import pandas as pd  # noqa: F811
-
-        yield pd.DataFrame(
-            rows,
-            columns=["media_id", "w1", "w2"]
-            + [f"band{b}" for b in range(8)],
+    def row(mid, content):
+        arr = decode_raw_blob(content)
+        if arr is None:
+            return
+        f, h, w, c = arr.shape
+        gs = arr[0].astype(np.int64).sum(axis=2)  # integer grays
+        rr = np.broadcast_to(np.minimum(7, np.arange(h)[:, None] * 8 // h), (h, w))
+        cc = np.broadcast_to(np.minimum(7, np.arange(w)[None, :] * 8 // w), (h, w))
+        cell_sum = np.zeros((8, 8), dtype=np.int64)
+        cell_n = np.zeros((8, 8), dtype=np.int64)
+        np.add.at(cell_sum, (rr, cc), gs)
+        np.add.at(cell_n, (rr, cc), 1)
+        gm = 0.0
+        cm = cell_sum / cell_n  # exact divisions
+        for i in range(8):
+            for j in range(8):
+                gm += cm[i, j]  # fixed (i, j) fold order
+        gm /= 64.0
+        bits = (cm > gm).astype(np.int64).reshape(64)
+        yield (
+            int(mid),
+            int((bits[:32] << np.arange(32)).sum()),
+            int((bits[32:] << np.arange(32)).sum()),
+        ) + tuple(
+            int((bits[8 * b : 8 * b + 8] << np.arange(8)).sum())
+            for b in range(8)
         )
 
-    return media.select("media_id", "content").mapInPandas(
-        batches, schema=schema
+    return _row_map(
+        media, ["media_id", "content"],
+        "media_id long, w1 long, w2 long, "
+        + ", ".join(f"band{b} long" for b in range(8)),
+        row,
     )
 
 
@@ -1161,7 +796,7 @@ def ahash_raw_images(media: DataFrame) -> DataFrame:
 # BMP (24-bit uncompressed) and WAV (PCM16) are fully specified by fixed
 # binary headers — the two standard media formats an engine can decode with
 # nothing but `struct`. These are REAL codecs (byte-exact with any other
-# reader), not the env-gated PIL/ffmpeg paths: fabricate writes genuine
+# reader): fabricate writes genuine
 # .bmp/.wav files, decode walks genuine headers (including unknown-chunk
 # skipping for RIFF), and the contract oracles predict the decoded stats
 # from the closed-form content ramps.
@@ -1228,34 +863,38 @@ def fabricate_bmp_media(df: DataFrame, id_col: str) -> DataFrame:
     w = 8 + id%12, pixel (r, c) has B = (id + r*w + c) % 256,
     G = (B + 85) % 256, R = (B + 170) % 256 — closed-form so a SQL
     oracle can predict every decoded statistic."""
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                h, w = 8 + mid % 8, 8 + mid % 12
-                v = (mid + np.arange(h * w, dtype=np.int64)).reshape(h, w)
-                rgb = np.stack(
-                    [(v + 170) % 256, (v + 85) % 256, v % 256], axis=-1
-                ).astype(np.uint8)
-                rows.append(
-                    {"media_id": mid, "content": encode_bmp(rgb)}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    fabricated = _fan_out(df.select(F.col(id_col)), heavy=False).mapInPandas(
-        batches, schema="media_id long, content binary"
+    return _fabricate(
+        df, id_col, lambda mid: encode_bmp(_ramp_rgb(mid)), "image",
+        "image/bmp", heavy=False,
     )
-    return fabricated.select(
-        "media_id",
-        F.lit("image").alias("modality"),
-        F.lit("image/bmp").alias("mime_type"),
-        "content",
-        F.octet_length("content").cast("long").alias("byte_len"),
+
+
+#: Output of the RGB still-image decoders (BMP, PNG, JPEG).
+_RGB_FEATURE_SCHEMA = (
+    "media_id long, byte_len long, width int, height int, "
+    "mean_r double, mean_g double, mean_b double, "
+    "r00 int, g00 int, b00 int"
+)
+
+
+def _rgb_features(media: DataFrame, decode) -> DataFrame:
+    """Arrow-batched decode of an RGB still image: dims, per-channel
+    means and the top-left pixel. Undecodable blobs are skipped."""
+
+    def row(mid, content, blen):
+        arr = decode(content)
+        if arr is None:
+            return
+        h, w, _ = arr.shape
+        means = arr.reshape(-1, 3).mean(axis=0)
+        yield (
+            int(mid), int(blen), w, h,
+            float(means[0]), float(means[1]), float(means[2]),
+            int(arr[0, 0, 0]), int(arr[0, 0, 1]), int(arr[0, 0, 2]),
+        )
+
+    return _row_map(
+        media, ["media_id", "content", "byte_len"], _RGB_FEATURE_SCHEMA, row
     )
 
 
@@ -1264,48 +903,7 @@ def decode_bmp_features(media: DataFrame) -> DataFrame:
     top-left pixel (which lives in the LAST stored row — decoding it
     correctly proves the bottom-up/BGR layout round-trips, not just the
     pixel multiset)."""
-    schema = (
-        "media_id long, byte_len long, width int, height int, "
-        "mean_r double, mean_g double, mean_b double, "
-        "r00 int, g00 int, b00 int"
-    )
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content, blen in zip(
-                pdf["media_id"], pdf["content"], pdf["byte_len"]
-            ):
-                arr = decode_bmp(content)
-                if arr is None:
-                    continue
-                h, w, _ = arr.shape
-                means = arr.reshape(-1, 3).mean(axis=0)
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "byte_len": int(blen),
-                        "width": w,
-                        "height": h,
-                        "mean_r": float(means[0]),
-                        "mean_g": float(means[1]),
-                        "mean_b": float(means[2]),
-                        "r00": int(arr[0, 0, 0]),
-                        "g00": int(arr[0, 0, 1]),
-                        "b00": int(arr[0, 0, 2]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "byte_len", "width", "height",
-                    "mean_r", "mean_g", "mean_b", "r00", "g00", "b00",
-                ],
-            )
-
-    return media.mapInPandas(batches, schema=schema)
+    return _rgb_features(media, decode_bmp)
 
 
 def encode_wav(samples, sample_rate: int) -> bytes:
@@ -1363,81 +961,36 @@ def fabricate_wav_media(df: DataFrame, id_col: str) -> DataFrame:
     samples at rate 8000 + (id%4)*4000, sample[i] =
     ((id*7 + i*13) % 4096) - 2048."""
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def encode(mid):
+        i = np.arange(64 + mid % 64, dtype=np.int64)
+        s = (mid * 7 + i * 13) % 4096 - 2048
+        return encode_wav(s.astype(np.int16), 8000 + (mid % 4) * 4000)
 
-        for pdf in it:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                n = 64 + mid % 64
-                rate = 8000 + (mid % 4) * 4000
-                s = ((mid * 7 + np.arange(n, dtype=np.int64) * 13) % 4096
-                     ) - 2048
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "content": encode_wav(s.astype(np.int16), rate),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    fabricated = _fan_out(df.select(F.col(id_col)), heavy=False).mapInPandas(
-        batches, schema="media_id long, content binary"
-    )
-    return fabricated.select(
-        "media_id",
-        F.lit("audio").alias("modality"),
-        F.lit("audio/wav").alias("mime_type"),
-        "content",
-        F.octet_length("content").cast("long").alias("byte_len"),
-    )
+    return _fabricate(df, id_col, encode, "audio", "audio/wav", heavy=False)
 
 
 def decode_wav_features(media: DataFrame) -> DataFrame:
     """Arrow-batched REAL WAV decode: sample rate, duration, exact
     integer mean numerator, peak amplitude, RMS."""
-    schema = (
+
+    def row(mid, content):
+        got = decode_wav(content)
+        if got is None:
+            return
+        rate, pcm = got
+        s = pcm.astype(np.int64)
+        n = len(s)
+        yield (
+            int(mid), int(rate), n, 1000.0 * n / rate, float(s.sum()) / n,
+            int(np.abs(s).max()), math.sqrt(float((s * s).sum()) / n),
+        )
+
+    return _row_map(
+        media, ["media_id", "content"],
         "media_id long, sample_rate int, n_samples long, "
-        "duration_ms double, mean_amplitude double, peak int, rms double"
+        "duration_ms double, mean_amplitude double, peak int, rms double",
+        row,
     )
-
-    def batches(it: Iterator) -> Iterator:
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                got = decode_wav(content)
-                if got is None:
-                    continue
-                rate, pcm = got
-                s = pcm.astype(np.int64)
-                n = len(s)
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "sample_rate": int(rate),
-                        "n_samples": n,
-                        "duration_ms": 1000.0 * n / rate,
-                        "mean_amplitude": float(s.sum()) / n,
-                        "peak": int(np.abs(s).max()),
-                        "rms": math.sqrt(float((s * s).sum()) / n),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_samples",
-                    "duration_ms", "mean_amplitude", "peak", "rms",
-                ],
-            )
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1639,84 +1192,17 @@ def fabricate_png_media(df: DataFrame, id_col: str) -> DataFrame:
     w = 8 + id%12) — so the decoded-statistics oracle is the same
     closed form, while the bytes on the wire are genuinely
     zlib-compressed with rotating scanline filters."""
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                h, w = 8 + mid % 8, 8 + mid % 12
-                v = (mid + np.arange(h * w, dtype=np.int64)).reshape(h, w)
-                rgb = np.stack(
-                    [(v + 170) % 256, (v + 85) % 256, v % 256], axis=-1
-                ).astype(np.uint8)
-                rows.append(
-                    {"media_id": mid, "content": encode_png(rgb)}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    fabricated = _fan_out(df.select(F.col(id_col)), heavy=True).mapInPandas(
-        batches, schema="media_id long, content binary"
-    )
-    return fabricated.select(
-        "media_id",
-        F.lit("image").alias("modality"),
-        F.lit("image/png").alias("mime_type"),
-        "content",
-        F.octet_length("content").cast("long").alias("byte_len"),
+    return _fabricate(
+        df, id_col, lambda mid: encode_png(_ramp_rgb(mid)), "image",
+        "image/png", heavy=True,
     )
 
 
 def decode_png_features(media: DataFrame) -> DataFrame:
     """Arrow-batched REAL PNG decode: dims + per-channel means + the
-    top-left pixel + the compression ratio (raw RGB bytes / file
-    bytes — only meaningful because the payload really is
-    zlib-compressed)."""
-    schema = (
-        "media_id long, byte_len long, width int, height int, "
-        "mean_r double, mean_g double, mean_b double, "
-        "r00 int, g00 int, b00 int"
-    )
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content, blen in zip(
-                pdf["media_id"], pdf["content"], pdf["byte_len"]
-            ):
-                arr = decode_png(content)
-                if arr is None:
-                    continue
-                h, w, _ = arr.shape
-                means = arr.reshape(-1, 3).mean(axis=0)
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "byte_len": int(blen),
-                        "width": w,
-                        "height": h,
-                        "mean_r": float(means[0]),
-                        "mean_g": float(means[1]),
-                        "mean_b": float(means[2]),
-                        "r00": int(arr[0, 0, 0]),
-                        "g00": int(arr[0, 0, 1]),
-                        "b00": int(arr[0, 0, 2]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "byte_len", "width", "height",
-                    "mean_r", "mean_g", "mean_b", "r00", "g00", "b00",
-                ],
-            )
-
-    return media.mapInPandas(batches, schema=schema)
+    top-left pixel of a genuinely zlib-compressed, scanline-filtered
+    payload."""
+    return _rgb_features(media, decode_png)
 
 
 # ---------------------------------------------------------------------------
@@ -2121,34 +1607,9 @@ def fabricate_jpeg_media(df: DataFrame, id_col: str) -> DataFrame:
     """Real baseline JPEGs from the SAME deterministic ramp as the
     BMP/PNG families — the bytes on the wire are genuinely
     entropy-coded (Annex-K Huffman over rounded DCT coefficients)."""
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                h, w = 8 + mid % 8, 8 + mid % 12
-                v = (mid + np.arange(h * w, dtype=np.int64)).reshape(h, w)
-                rgb = np.stack(
-                    [(v + 170) % 256, (v + 85) % 256, v % 256], axis=-1
-                ).astype(np.uint8)
-                rows.append(
-                    {"media_id": mid, "content": encode_jpeg(rgb)}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    fabricated = _fan_out(df.select(F.col(id_col)), heavy=True).mapInPandas(
-        batches, schema="media_id long, content binary"
-    )
-    return fabricated.select(
-        "media_id",
-        F.lit("image").alias("modality"),
-        F.lit("image/jpeg").alias("mime_type"),
-        "content",
-        F.octet_length("content").cast("long").alias("byte_len"),
+    return _fabricate(
+        df, id_col, lambda mid: encode_jpeg(_ramp_rgb(mid)), "image",
+        "image/jpeg", heavy=True,
     )
 
 
@@ -2158,48 +1619,7 @@ def decode_jpeg_features(media: DataFrame) -> DataFrame:
     rounding (|err| ≤ ~2 per pixel with the all-ones table) — the
     lossless-exact columns are the dims; accuracy of the rest is
     pinned against the BMP/PNG twins in tests."""
-    schema = (
-        "media_id long, byte_len long, width int, height int, "
-        "mean_r double, mean_g double, mean_b double, "
-        "r00 int, g00 int, b00 int"
-    )
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content, blen in zip(
-                pdf["media_id"], pdf["content"], pdf["byte_len"]
-            ):
-                arr = decode_jpeg(content)
-                if arr is None:
-                    continue
-                h, w, _ = arr.shape
-                means = arr.reshape(-1, 3).mean(axis=0)
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "byte_len": int(blen),
-                        "width": w,
-                        "height": h,
-                        "mean_r": float(means[0]),
-                        "mean_g": float(means[1]),
-                        "mean_b": float(means[2]),
-                        "r00": int(arr[0, 0, 0]),
-                        "g00": int(arr[0, 0, 1]),
-                        "b00": int(arr[0, 0, 2]),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "byte_len", "width", "height",
-                    "mean_r", "mean_g", "mean_b", "r00", "g00", "b00",
-                ],
-            )
-
-    return media.mapInPandas(batches, schema=schema)
+    return _rgb_features(media, decode_jpeg)
 
 
 # ---------------------------------------------------------------------------
@@ -2323,95 +1743,38 @@ def fabricate_avi_media(
     per-frame statistics and frame-to-frame motion are closed-form (up
     to the pinned JPEG rounding)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def encode(mid):
+        frames = [_ramp_rgb(mid, 17 * f) for f in range(n_frames)]
+        return encode_avi_mjpeg(frames, fps=10)
 
-        for pdf in it:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                h, w = 8 + mid % 8, 8 + mid % 12
-                frames = []
-                for f in range(n_frames):
-                    v = (
-                        mid + 17 * f + np.arange(h * w, dtype=np.int64)
-                    ).reshape(h, w)
-                    frames.append(
-                        np.stack(
-                            [(v + 170) % 256, (v + 85) % 256, v % 256],
-                            axis=-1,
-                        ).astype(np.uint8)
-                    )
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "content": encode_avi_mjpeg(frames, fps=10),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    fabricated = _fan_out(df.select(F.col(id_col)), heavy=True).mapInPandas(
-        batches, schema="media_id long, content binary"
-    )
-    return fabricated.select(
-        "media_id",
-        F.lit("video").alias("modality"),
-        F.lit("video/x-msvideo").alias("mime_type"),
-        "content",
-        F.octet_length("content").cast("long").alias("byte_len"),
-    )
+    return _fabricate(df, id_col, encode, "video", "video/x-msvideo", heavy=True)
 
 
 def decode_avi_features(media: DataFrame) -> DataFrame:
     """Arrow-batched REAL video decode: container fps + frame count +
     dims (lossless-exact) and decoded per-video mean/motion-energy
     statistics (JPEG-rounding accuracy, pinned in tests)."""
-    schema = (
+
+    def row(mid, content):
+        dec = decode_avi_mjpeg(content)
+        if dec is None:
+            return
+        fps, frames = dec
+        h, w, _ = frames[0].shape
+        stack = np.stack(frames).astype(np.float64)
+        motion = (
+            float(np.abs(np.diff(stack, axis=0)).mean())
+            if len(frames) > 1
+            else 0.0
+        )
+        yield int(mid), len(frames), int(fps), w, h, float(stack.mean()), motion
+
+    return _row_map(
+        media, ["media_id", "content"],
         "media_id long, n_frames int, fps int, width int, height int, "
-        "mean_luma double, motion_energy double"
+        "mean_luma double, motion_energy double",
+        row,
     )
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                dec = decode_avi_mjpeg(content)
-                if dec is None:
-                    continue
-                fps, frames = dec
-                h, w, _ = frames[0].shape
-                stack = np.stack(frames).astype(np.float64)
-                motion = (
-                    float(
-                        np.abs(np.diff(stack, axis=0)).mean()
-                    )
-                    if len(frames) > 1
-                    else 0.0
-                )
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "n_frames": len(frames),
-                        "fps": int(fps),
-                        "width": w,
-                        "height": h,
-                        "mean_luma": float(stack.mean()),
-                        "motion_energy": motion,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_frames", "fps", "width", "height",
-                    "mean_luma", "motion_energy",
-                ],
-            )
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2582,79 +1945,38 @@ def fabricate_adpcm_media(df: DataFrame, id_col: str) -> DataFrame:
     tracks it tightly (the WAV/PCM family's modular ramp has ±4096
     jumps that ADPCM, by design, cannot follow)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def encode(mid):
+        n = 64 + mid % 64
+        s = np.rint(
+            2000.0 * np.sin(2 * np.pi * (3 + mid % 5) * np.arange(n) / n)
+        ).astype(np.int64)
+        return encode_adpcm_wav(list(s), 8000 + (mid % 4) * 4000)
 
-        for pdf in it:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                n = 64 + mid % 64
-                rate = 8000 + (mid % 4) * 4000
-                i = np.arange(n)
-                s = np.rint(
-                    2000.0 * np.sin(2 * np.pi * (3 + mid % 5) * i / n)
-                ).astype(np.int64)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "content": encode_adpcm_wav(list(s), rate),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    fabricated = _fan_out(df.select(F.col(id_col)), heavy=False).mapInPandas(
-        batches, schema="media_id long, content binary"
-    )
-    return fabricated.select(
-        "media_id",
-        F.lit("audio").alias("modality"),
-        F.lit("audio/x-adpcm").alias("mime_type"),
-        "content",
-        F.octet_length("content").cast("long").alias("byte_len"),
-    )
+    return _fabricate(df, id_col, encode, "audio", "audio/x-adpcm", heavy=False)
 
 
 def decode_adpcm_features(media: DataFrame) -> DataFrame:
     """Arrow-batched REAL ADPCM decode: container facts (rate, sample
     count, duration — lossless-exact) plus decoded peak amplitude
     (codec-accuracy-bounded, pinned in tests)."""
-    schema = (
+
+    def row(mid, content):
+        dec = decode_adpcm_wav(content)
+        if dec is None:
+            return
+        rate, samples = dec
+        s = np.asarray(samples, dtype=np.int64)
+        yield (
+            int(mid), int(rate), len(s), 1000.0 * len(s) / rate,
+            int(np.abs(s).max()) if len(s) else 0,
+        )
+
+    return _row_map(
+        media, ["media_id", "content"],
         "media_id long, sample_rate int, n_samples int, "
-        "duration_ms double, peak int"
+        "duration_ms double, peak int",
+        row,
     )
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                dec = decode_adpcm_wav(content)
-                if dec is None:
-                    continue
-                rate, samples = dec
-                s = np.asarray(samples, dtype=np.int64)
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "sample_rate": int(rate),
-                        "n_samples": len(s),
-                        "duration_ms": 1000.0 * len(s) / rate,
-                        "peak": int(np.abs(s).max()) if len(s) else 0,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_samples",
-                    "duration_ms", "peak",
-                ],
-            )
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2935,42 +2257,20 @@ def fabricate_gif_media(df: DataFrame, id_col: str) -> DataFrame:
     1-3 are undecodable without frame 0's canvas (inter-frame for
     real)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def encode(mid):
+        h, w = 8 + mid % 8, 8 + mid % 12
+        base = (
+            (mid + np.arange(h * w, dtype=np.int64)) % 256
+        ).reshape(h, w).astype(np.uint8)
+        frames, rects = [base], [None]
+        for f in range(1, 4):
+            top, left = _GIF_RECTS[f - 1]
+            fill = np.full((4, 4), (mid + 17 * f) % 256, dtype=np.uint8)
+            frames.append(fill)
+            rects.append((top, left, fill))
+        return encode_gif(frames, rects)
 
-        for pdf in it:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                h, w = 8 + mid % 8, 8 + mid % 12
-                base = (
-                    (mid + np.arange(h * w, dtype=np.int64)) % 256
-                ).reshape(h, w).astype(np.uint8)
-                frames = [base]
-                rects = [None]
-                for f in range(1, 4):
-                    top, left = _GIF_RECTS[f - 1]
-                    fill = np.full(
-                        (4, 4), (mid + 17 * f) % 256, dtype=np.uint8
-                    )
-                    frames.append(fill)
-                    rects.append((top, left, fill))
-                rows.append(
-                    {"media_id": mid, "content": encode_gif(frames, rects)}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    fabricated = _fan_out(df.select(F.col(id_col)), heavy=False).mapInPandas(
-        batches, schema="media_id long, content binary"
-    )
-    return fabricated.select(
-        "media_id",
-        F.lit("video").alias("modality"),
-        F.lit("image/gif").alias("mime_type"),
-        "content",
-        F.octet_length("content").cast("long").alias("byte_len"),
-    )
+    return _fabricate(df, id_col, encode, "video", "image/gif", heavy=False)
 
 
 def decode_gif_features(media: DataFrame) -> DataFrame:
@@ -2979,41 +2279,21 @@ def decode_gif_features(media: DataFrame) -> DataFrame:
     so the sums are integer-exact — a one-bit LZW or composition error
     fails the value gate, stronger than the JPEG family's rounded
     statistics)."""
-    schema = (
-        "media_id long, frame_idx int, width int, height int, "
-        "pixel_sum long"
+
+    def row(mid, content):
+        dec = decode_gif(content)
+        if dec is None:
+            return
+        palette, frames = dec
+        red = palette[:, 0].astype(np.int64)
+        for fi, fr in enumerate(frames):
+            yield int(mid), fi, fr.shape[1], fr.shape[0], int(red[fr].sum())
+
+    return _row_map(
+        media, ["media_id", "content"],
+        "media_id long, frame_idx int, width int, height int, pixel_sum long",
+        row,
     )
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                dec = decode_gif(content)
-                if dec is None:
-                    continue
-                palette, frames = dec
-                red = palette[:, 0].astype(np.int64)
-                for fi, fr in enumerate(frames):
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "frame_idx": fi,
-                            "width": fr.shape[1],
-                            "height": fr.shape[0],
-                            "pixel_sum": int(red[fr].sum()),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height", "pixel_sum",
-                ],
-            )
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3160,44 +2440,17 @@ def fabricate_mpv_media(df: DataFrame, id_col: str) -> DataFrame:
     the top-left pixel are exact closed forms, and a decoder that
     ignores the motion vectors reconstructs provably wrong pixels."""
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def encode(mid):
+        h, w = 8 * (1 + mid % 2), 8 * (1 + mid % 3)
+        frames = [((mid + np.arange(h * w, dtype=np.int64)) % 256).reshape(h, w)]
+        mvs = []
+        for f in range(1, 4):
+            dx, dy, b = _mpv_motion(mid, f)
+            frames.append((np.roll(frames[-1], (-dy, -dx), axis=(0, 1)) + b) % 256)
+            mvs.append((dx, dy))
+        return encode_mpv([fr.astype(np.uint8) for fr in frames], mvs)
 
-        for pdf in it:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                h, w = 8 * (1 + mid % 2), 8 * (1 + mid % 3)
-                base = (
-                    (mid + np.arange(h * w, dtype=np.int64)) % 256
-                ).reshape(h, w)
-                frames, mvs = [base], []
-                for f in range(1, 4):
-                    dx, dy, b = _mpv_motion(mid, f)
-                    nxt = (np.roll(frames[-1], (-dy, -dx), axis=(0, 1)) + b) % 256
-                    frames.append(nxt)
-                    mvs.append((dx, dy))
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "content": encode_mpv(
-                            [fr.astype(np.uint8) for fr in frames], mvs
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
-
-    fabricated = _fan_out(df.select(F.col(id_col)), heavy=False).mapInPandas(
-        batches, schema="media_id long, content binary"
-    )
-    return fabricated.select(
-        "media_id",
-        F.lit("video").alias("modality"),
-        F.lit("video/x-mpv1").alias("mime_type"),
-        "content",
-        F.octet_length("content").cast("long").alias("byte_len"),
-    )
+    return _fabricate(df, id_col, encode, "video", "video/x-mpv1", heavy=False)
 
 
 def decode_mpv_features(media: DataFrame) -> DataFrame:
@@ -3206,37 +2459,20 @@ def decode_mpv_features(media: DataFrame) -> DataFrame:
     The codec is lossless mod-256 arithmetic, so both are integer-exact;
     ``p00`` is position-dependent where the sum is shift-invariant —
     a decoder that skipped or misapplied a motion vector flips it."""
-    schema = (
-        "media_id long, frame_idx int, width int, height int, "
-        "pixel_sum long, p00 int"
-    )
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                frames = decode_mpv(content)
-                if frames is None:
-                    continue
-                for fi, fr in enumerate(frames):
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "frame_idx": fi,
-                            "width": fr.shape[1],
-                            "height": fr.shape[0],
-                            "pixel_sum": int(fr.astype("int64").sum()),
-                            "p00": int(fr[0, 0]),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "pixel_sum", "p00",
-                ],
+    def row(mid, content):
+        frames = decode_mpv(content)
+        if frames is None:
+            return
+        for fi, fr in enumerate(frames):
+            yield (
+                int(mid), fi, fr.shape[1], fr.shape[0],
+                int(fr.astype("int64").sum()), int(fr[0, 0]),
             )
 
-    return media.mapInPandas(batches, schema=schema)
+    return _row_map(
+        media, ["media_id", "content"],
+        "media_id long, frame_idx int, width int, height int, "
+        "pixel_sum long, p00 int",
+        row,
+    )

@@ -27,13 +27,14 @@ Scale deltas from the reference (SURVEY §4.3): no per-request ``.take(1)`` /
 from __future__ import annotations
 
 import datetime as dt
+from collections import Counter
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..operators.latest import latest_per_key, top_n_per_key
-from ..operators.profile import mode_per_group
+from ..operators.profile import bucketed_profile
 
 METRICS = (
     "temperature",
@@ -184,7 +185,6 @@ class WeatherService:
 
     def _profile(self, df: DataFrame, bucket: F.Column, name: str) -> list[dict]:
         """Shared agg block (A2-A6+J) — the reference pastes this 6×."""
-        bucketed = df.withColumn(name, bucket)
         aggs = (
             [F.avg(m).alias(m) for m in METRICS]
             + [
@@ -193,17 +193,10 @@ class WeatherService:
             ]
             + [F.count(F.lit(1)).alias("n_events")]
         )
-        agg = bucketed.groupBy(name).agg(*aggs)
-        modal = mode_per_group(bucketed, [name], "weathercode", "weathercode_mode")
-        # null-safe join key, matching operators/profile.py bucketed_profile:
-        # a NULL bucket (null event_timestamp) would lose its modal code to
-        # plain equi-join semantics
-        out = (
-            agg.join(modal, on=agg[name].eqNullSafe(modal[name]), how="left")
-            .drop(modal[name])
-            .orderBy(name)
-            .collect()
-        )
+        out = bucketed_profile(
+            df, bucket, name, aggs,
+            mode_col="weathercode", mode_out="weathercode_mode",
+        ).collect()
         recs = []
         for r in out:
             d = {k: v for k, v in r.asDict().items() if v is not None}
@@ -329,20 +322,21 @@ class WeatherService:
         }
 
 
+def _modal_code(rows: list[dict]):
+    """Most frequent non-null ``weathercode`` of ``rows``, ties to the
+    smallest code (reference spark.py:632-635); None when there is none."""
+    counts = Counter(r["weathercode"] for r in rows if r.get("weathercode") is not None)
+    if not counts:
+        return None
+    top = max(counts.values())
+    return min(c for c, n in counts.items() if n == top)
+
+
 def persistence_predictor(context: list[dict], n_steps: int) -> list[dict]:
     """Default model: repeat the last observation forward at 5-min cadence;
     weathercode = modal code of the context (smallest-code ties)."""
     last = context[-1]
-    counts: dict[int, int] = {}
-    for r in context:
-        c = r.get("weathercode")
-        if c is not None:
-            counts[c] = counts.get(c, 0) + 1
-    modal = (
-        min([c for c, n in counts.items() if n == max(counts.values())])
-        if counts
-        else None
-    )
+    modal = _modal_code(context)
     t0 = last["event_timestamp"]
     if isinstance(t0, str):
         t0 = dt.datetime.fromisoformat(t0)
@@ -370,21 +364,11 @@ def hourly_rollup(steps: list[dict]) -> list[dict]:
     for hour in sorted(by_hour):
         rows = by_hour[hour]
         temps = [r["temperature"] for r in rows if r.get("temperature") is not None]
-        counts: dict[int, int] = {}
-        for r in rows:
-            c = r.get("weathercode")
-            if c is not None:
-                counts[c] = counts.get(c, 0) + 1
-        modal = (
-            min([c for c, n in counts.items() if n == max(counts.values())])
-            if counts
-            else None
-        )
         out.append(
             {
                 "hour": hour,
                 "temperature": sum(temps) / len(temps) if temps else None,
-                "weathercode": modal,
+                "weathercode": _modal_code(rows),
                 "n_steps": len(rows),
             }
         )

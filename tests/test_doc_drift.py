@@ -142,42 +142,26 @@ def test_committed_close_regressions_are_triaged():
     )
 
 
-def _last_source_commit() -> str | None:
-    import subprocess
+def _source_digest() -> str:
+    """Digest of the package source under test (tools/source_digest.py,
+    the recipe both artifact generators stamp)."""
+    import importlib.util
 
-    try:
-        out = subprocess.run(
-            ["git", "-C", REPO, "log", "-1", "--format=%H", "--",
-             "bigdata_weather_system_spark/"],
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip()
-        return out or None
-    except Exception:
-        return None
-
-
-def _is_ancestor(maybe_ancestor: str, commit: str) -> bool:
-    import subprocess
-
-    r = subprocess.run(
-        ["git", "-C", REPO, "merge-base", "--is-ancestor",
-         maybe_ancestor, commit],
-        capture_output=True, timeout=10,
+    spec = importlib.util.spec_from_file_location(
+        "source_digest", os.path.join(REPO, "tools", "source_digest.py")
     )
-    return r.returncode == 0
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.source_digest(REPO)
 
 
 def test_parity_artifact_not_older_than_source():
-    """Round-7 What's-wrong #2: PARITY_r7 silently predated a source
-    commit. The newest parity artifact must carry its generating commit
-    (``summary.commit``, stamped by tools/run_parity.py since round 8)
-    and that commit must contain the newest commit touching
-    ``bigdata_weather_system_spark/`` — i.e., the artifact was generated
-    at (or after) the last source change."""
+    """The newest parity artifact must have been generated from exactly
+    this package source: ``summary.source_sha`` (stamped by
+    tools/run_parity.py) must equal the digest of the tree under test.
+    ``summary.commit`` stays as provenance only."""
     import glob
     import json
-
-    import pytest
 
     files = {
         int(m.group(1)): p
@@ -187,43 +171,23 @@ def test_parity_artifact_not_older_than_source():
     assert files
     newest_round = max(files)
     with open(files[newest_round]) as f:
-        summary = json.load(f)["summary"]
-    stamp = summary.get("commit")
-    if stamp is None:
-        if newest_round <= 7:
-            pytest.skip("pre-stamp artifact (commit stamps begin round 8)")
-        raise AssertionError(
-            f"PARITY_r{newest_round} has no generating-commit stamp — "
-            "regenerate with tools/run_parity.py"
-        )
-    last_src = _last_source_commit()
-    if last_src is None:
-        pytest.skip("git history unavailable")
-    assert _is_ancestor(last_src, stamp), (
-        f"PARITY_r{newest_round} was generated at {stamp[:12]}, which "
-        f"predates the last source commit {last_src[:12]} — stale; "
-        "re-run tools/run_parity.py (or tools/round_close.py)"
+        stamp = json.load(f)["summary"].get("source_sha")
+    live = _source_digest()
+    assert stamp == live, (
+        f"PARITY_r{newest_round} source stamp {stamp} != live package "
+        f"digest {live} — stale or unstamped; re-run tools/run_parity.py "
+        "(or tools/round_close.py)"
     )
 
 
 def test_plan_audit_not_older_than_source():
-    """Same freshness gate for PLAN_AUDIT.md (stamped 'at commit <hash>'
-    since round 8)."""
-    import pytest
-
+    """Same freshness gate for PLAN_AUDIT.md (stamped 'package source
+    sha256 <digest>' by tools/plan_doctor.py)."""
     with open(os.path.join(REPO, "PLAN_AUDIT.md")) as f:
-        text = f.read()
-    m = re.search(r"at commit ([0-9a-f]{7,40})", text)
-    if not m:
-        raise AssertionError(
-            "PLAN_AUDIT.md carries no generating-commit stamp — "
-            "regenerate with tools/plan_doctor.py"
-        )
-    last_src = _last_source_commit()
-    if last_src is None:
-        pytest.skip("git history unavailable")
-    assert _is_ancestor(last_src, m.group(1)), (
-        f"PLAN_AUDIT.md was generated at {m.group(1)[:12]}, which "
-        f"predates the last source commit {last_src[:12]} — stale; "
-        "re-run tools/plan_doctor.py"
+        m = re.search(r"package source sha256 ([0-9a-f]{16})", f.read())
+    live = _source_digest()
+    assert m and m.group(1) == live, (
+        f"PLAN_AUDIT.md source stamp {m.group(1) if m else None} != live "
+        f"package digest {live} — stale or unstamped; re-run "
+        "tools/plan_doctor.py"
     )

@@ -1,5 +1,4 @@
-"""LLM-pipeline operators: dedup recall, similarity recall, text analysis,
-multimodal plumbing shapes."""
+"""LLM-pipeline operators: dedup recall, similarity recall, text analysis."""
 
 from __future__ import annotations
 
@@ -12,11 +11,6 @@ from bigdata_weather_system_spark.operators.dedup import (
     minhash_dedup_pairs,
     ngram_jaccard_pairs,
     simhash_near_pairs,
-)
-from bigdata_weather_system_spark.operators.multimodal import (
-    decode_image_features,
-    sample_frames,
-    to_media_table,
 )
 from bigdata_weather_system_spark.operators.similarity import (
     cosine_topk_bruteforce,
@@ -173,36 +167,6 @@ def test_tokens_drop_empties(spark):
     df = spark.createDataFrame([(1, "  a  b   c ")], "id long, text string")
     out = df.select(tokens(F.col("text")).alias("t")).collect()[0].t
     assert out == ["a", "b", "c"]
-
-
-def test_media_decode_plumbing(docs):
-    media = to_media_table(docs.limit(20), "doc_id", "text", "image")
-    feats = decode_image_features(media).collect()
-    assert len(feats) == 20
-    for r in feats:
-        assert len(r.feature) == 16
-        assert r.byte_len > 0 and r.width >= 16 and r.height >= 16
-
-
-def test_media_decode_real_codec_is_stubbed(docs):
-    media = to_media_table(docs.limit(1), "doc_id", "text", "image")
-    with pytest.raises(Exception) as exc_info:
-        decode_image_features(media, use_real_codec=True).collect()
-    assert "NotImplementedError" in str(exc_info.value) or "stubbed" in str(
-        exc_info.value
-    )
-
-
-def test_frame_sampling_fanout(docs):
-    media = to_media_table(docs.limit(5), "doc_id", "text", "video")
-    frames = sample_frames(media, every_n_bytes=64, max_frames=4).collect()
-    ids = {r.media_id for r in frames}
-    assert len(ids) == 5
-    per = {}
-    for r in frames:
-        per.setdefault(r.media_id, []).append(r.frame_idx)
-    for idxs in per.values():
-        assert sorted(idxs) == list(range(len(idxs)))
 
 
 def test_ivf_topk_recall_beats_floor(emb):

@@ -1,7 +1,10 @@
-"""RAW-codec multimodal tests: real numpy decode/resize/frame-stride
-paths (compressed-format kernels remain gated behind require_codec)."""
+"""Multimodal media tests: every codec (RAW, PCM, BMP, WAV, PNG, JPEG,
+AVI, ADPCM, GIF, MPV1, MPA1) is real stdlib+numpy code — round trips,
+rejection of malformed bytes, and the Arrow-batched wrappers over them."""
 
 from __future__ import annotations
+
+import pytest
 
 # --- RAW codec: the real (numpy-only) decode path ---------------------------
 
@@ -36,15 +39,68 @@ def test_decode_raw_features_exact_means(spark):
     pix[0, :, :, 0] = 10  # R plane
     pix[0, :, :, 1] = 20  # G plane
     pix[0, :, :, 2] = 60  # B plane
-    rows = [(1, encode_raw_blob(pix, 1)), (2, b"not a raw blob")]
-    df = spark.createDataFrame(rows, "media_id long, content binary")
-    out = {r.media_id: r for r in decode_raw_features(df).collect()}
-    ok = out[1]
+    df = spark.createDataFrame(
+        [(1, encode_raw_blob(pix, 1))], "media_id long, content binary"
+    )
+    (ok,) = decode_raw_features(df).collect()
     assert (ok.width, ok.height, ok.channels, ok.n_pixels) == (2, 2, 3, 12)
     assert ok.mean_brightness == 30.0
     assert ok.channel_means == [10.0, 20.0, 60.0]
-    bad = out[2]
-    assert bad.width is None and bad.mean_brightness is None
+
+
+#: Wrappers that keep an undecodable row with null values; every other
+#: wrapper drops it.
+_NULL_ROW_WRAPPERS = {
+    "decode_raw_features", "resize_raw_images", "decode_pcm_features",
+    "resample_pcm", "pcm_bin_energy",
+}
+_JUNK_BLOBS = [
+    b"", b"junk", b"RAWB\x00\x01", b"RAWA\x00\x00\x1f\x40\x00\x01\x00\x00\x01",
+    b"RIFF\x00\x00\x00\x00WAVEfmt ", b"\x89PNG\r\n\x1a\n" + b"x" * 20,
+    b"\xff\xd8\xff", b"GIF89a", b"MPV1\x08", b"MPA1\x40",
+]
+
+
+@pytest.mark.parametrize(
+    "wrapper",
+    [
+        f"decode_{f}_features"
+        for f in (
+            "mpa", "raw", "pcm", "bmp", "wav", "png", "jpeg", "avi",
+            "adpcm", "gif", "mpv",
+        )
+    ]
+    + [
+        "decode_image_histogram_features", "sample_video_frames",
+        "resize_raw_images", "sample_raw_frames", "resample_pcm",
+        "pcm_bin_energy", "motion_energy_raw", "ahash_raw_images",
+    ],
+)
+def test_wrapper_on_undecodable_blobs(spark, wrapper):
+    """Junk in every row: skip-policy wrappers return no rows (each Arrow
+    batch comes back empty); null-row wrappers keep one row per input
+    with its media_id and every computed value null (modality and
+    mime_type of a media-table output are the wrapper's constants)."""
+    from pyspark.sql import functions as F
+
+    from bigdata_weather_system_spark.operators import multimodal
+
+    media = spark.createDataFrame(
+        list(enumerate(_JUNK_BLOBS, start=1)), "media_id long, content binary"
+    ).withColumn("byte_len", F.octet_length("content").cast("long"))
+    fn = getattr(multimodal, wrapper)
+    out = fn(media, 4, 4) if wrapper == "resize_raw_images" else fn(media)
+    rows = out.collect()
+    if wrapper not in _NULL_ROW_WRAPPERS:
+        assert rows == []
+        return
+    assert sorted(r.media_id for r in rows) == list(range(1, len(_JUNK_BLOBS) + 1))
+    for r in rows:
+        computed = {
+            k: v for k, v in r.asDict().items()
+            if k not in ("media_id", "modality", "mime_type")
+        }
+        assert computed and set(computed.values()) == {None}, r
 
 
 def test_resize_raw_images_nearest_neighbor(spark):

@@ -413,8 +413,16 @@ def test_proration_reuses_one_partitioning_for_all_windows(spark):
 
 
 def test_pca_moment_pass_partial_aggregates(spark):
-    plan = plan_of(spark, "embedding_pca_top_component")
-    assert "partial_sum" in plan
+    """The covariance moments are the one pass over the whole corpus;
+    the query collects them while it is built (power rounds run on the
+    driver), so its returned plan is only the small result scan. Pin the
+    moment pass itself, on the query's own embedding input."""
+    from bigdata_weather_system_spark.contract.core import _t
+    from bigdata_weather_system_spark.contract.pca_ops import _DIM
+    from bigdata_weather_system_spark.operators.pca import covariance_relation
+
+    cov = covariance_relation(_t(spark, SF, "embeddings"), "embedding", _DIM)
+    assert "partial_sum" in cov._jdf.queryExecution().executedPlan().toString()
 
 
 def test_dsir_scoring_broadcasts_ratio_table(spark):

@@ -33,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdata_weather_system_spark import contract  # noqa: E402
 from bigdata_weather_system_spark.session import get_spark  # noqa: E402
+from tools.source_digest import source_digest  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -137,7 +138,8 @@ def main() -> int:
         "# PLAN AUDIT — anti-pattern sweep over every registered query",
         "",
         f"Generated by `tools/plan_doctor.py` at {SF_DIR} over "
-        f"{len(rows)} queries at commit {_head}. "
+        f"{len(rows)} queries at commit {_head}, package source sha256 "
+        f"{source_digest(REPO)}. "
         "Hard gates: zero row-at-a-time Python "
         "stages (`BatchEvalPython`), zero undocumented cartesian joins, "
         "zero undocumented full global sorts. Allowlisted shapes and "

