@@ -4,8 +4,9 @@ The weather event model follows the reference's two-layer design
 (``/root/reference/prediction/preprocessing/spark.py:131, 179-253``): JSON
 payloads are decoded into an untyped ``map<string,string>`` staging column
 (schema-tolerant — unknown keys survive), then a fixed list of fields is
-promoted to typed columns with explicit casts. No schema inference anywhere:
-at 100 TB an inference pass is a full extra scan.
+promoted to typed columns with explicit casts, with no schema inference. The
+parquet table loader infers a read schema once per table file per process
+and declares it on every later read (``sources/tables.py``).
 """
 
 from __future__ import annotations

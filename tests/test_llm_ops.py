@@ -28,12 +28,16 @@ from conftest import TEST_SF_DIR
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents").cache()
+    df = load_table(spark, sf_dir, "documents").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
-    return load_table(spark, sf_dir, "embeddings").cache()
+    df = load_table(spark, sf_dir, "embeddings").cache()
+    yield df
+    df.unpersist()
 
 
 def test_exact_dedup_keeps_min_id(spark):
@@ -849,6 +853,7 @@ def test_bpe_train_matches_reference_on_testdata(spark, sf_dir):
     words = Counter()
     for r in d.collect():
         words.update((r.text or "").lower().split())
+    d.unpersist()
     ref = _bpe_reference(dict(words), 5)
     assert [(a, b, n) for _, a, b, n in merges] == ref
 

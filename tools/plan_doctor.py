@@ -16,6 +16,11 @@ during construction are noted):
   acceptable as deliberate presentation sorts.
 - informational counts: Exchanges, SortMergeJoins, broadcasts, Arrow
   stages — the at-a-glance cost silhouette of each plan.
+- **builder jobs** — Spark jobs run by the builder call itself (each call
+  runs under its own job group). Every table is read once before the
+  sweep, so the one-time schema inference of ``load_table`` is charged to
+  no query; what remains are driver-side folds that execute while the
+  query is built, listed under the table.
 
 Hard gates (the audit FAILS, exit 1): any row_python_udf, any cartesian
 outside the documented allowlist.
@@ -28,11 +33,14 @@ from __future__ import annotations
 import os
 import re
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdata_weather_system_spark import contract  # noqa: E402
+from bigdata_weather_system_spark.schemas import TESTDATA_TABLES  # noqa: E402
 from bigdata_weather_system_spark.session import get_spark  # noqa: E402
+from bigdata_weather_system_spark.sources.tables import load_table  # noqa: E402
 from tools.source_digest import source_digest  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
@@ -104,15 +112,35 @@ def audit(name: str, plan: str) -> dict:
     }
 
 
+def builder_jobs(spark, groups: list[str]) -> dict[str, int]:
+    """Jobs per job group. The status store sees job starts in order, so
+    once a marker job run after every group shows, all of theirs have."""
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-doctor:marker", "marker")
+    spark.range(1).count()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 60
+    while not tracker.getJobIdsForGroup("plan-doctor:marker") and time.time() < deadline:
+        time.sleep(0.1)
+    return {g: len(tracker.getJobIdsForGroup(g)) for g in groups}
+
+
 def main() -> int:
     spark = get_spark(app_name="plan-doctor")
+    sc = spark.sparkContext
+    for t in TESTDATA_TABLES:
+        load_table(spark, SF_DIR, t)
     rows = []
     n_flagged = 0
     for name in sorted(contract.QUERIES):
         try:
+            sc.setJobGroup(f"build:{name}", name)
             df = contract.QUERIES[name](spark, SF_DIR)
+            sc.setLocalProperty("spark.jobGroup.id", None)
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as e:  # noqa: BLE001
+            sc.setLocalProperty("spark.jobGroup.id", None)
             rows.append((name, {"flags": [f"ERROR:{type(e).__name__}"]}))
             n_flagged += 1
             continue
@@ -121,6 +149,9 @@ def main() -> int:
         if a["flags"]:
             n_flagged += 1
         print(name, a["flags"] if a["flags"] else "ok", flush=True)
+    jobs = builder_jobs(spark, [f"build:{n}" for n, _ in rows])
+    for name, a in rows:
+        a["builder_jobs"] = jobs[f"build:{name}"]
 
     try:
         import subprocess
@@ -147,20 +178,31 @@ def main() -> int:
         "",
         f"**Result: {n_flagged} flagged / {len(rows)} queries.**",
         "",
-        "| query | flags | exchanges | SMJ | broadcasts | arrow stages |",
-        "|---|---|---|---|---|---|",
+        "| query | flags | exchanges | SMJ | broadcasts | arrow stages "
+        "| builder jobs |",
+        "|---|---|---|---|---|---|---|",
     ]
     for name, a in rows:
         lines.append(
-            "| {} | {} | {} | {} | {} | {} |".format(
+            "| {} | {} | {} | {} | {} | {} | {} |".format(
                 name,
                 ", ".join(a.get("flags", [])) or "—",
                 a.get("exchanges", "?"),
                 a.get("smj", "?"),
                 a.get("broadcast", "?"),
                 a.get("arrow_python", "?"),
+                a["builder_jobs"],
             )
         )
+    folds = [(n, a["builder_jobs"]) for n, a in rows if a["builder_jobs"]]
+    lines += [
+        "",
+        "## Builder jobs",
+        "",
+        f"{len(folds)} queries run Spark jobs while they are built "
+        "(driver-side folds; tables were read once before the sweep):",
+        "",
+    ] + [f"- `{n}`: {j}" for n, j in folds]
     allow_lines = ["", "## Allowlist", ""]
     for kind, entries in ALLOW.items():
         for q, why in entries.items():
