@@ -683,7 +683,7 @@ def bootstrap_value_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first exchange — on a single-file scan that is one core doing 32N
     # hashes; spread the narrow (id, value) projection first (guide
     # §2.5 input skew: one unsplittable input partition)
-    from .core import _spread
+    from ..operators.similarity import _spread
 
     return (
         _spread(ev.select("event_id", "value"))

@@ -1179,7 +1179,7 @@ def doc_ngram_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``doc_cross_split_contamination`` (overlap ≠ similarity: one shared
     quote flags a doc even at low whole-doc Jaccard)."""
     from ..operators.text import tokens
-    from .core import _spread
+    from ..operators.similarity import _spread
 
     docs = _t(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))

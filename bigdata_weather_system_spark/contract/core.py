@@ -52,21 +52,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """File-count-guarded repartition to session parallelism, for query
-    stages that do heavy per-row compute (tokenize / explode / hash)
-    BEFORE their first exchange: a table that arrives as fewer files
-    than cores scans as that many tasks, serializing the narrow front
-    end of the plan on one core. A table whose scan already yields >=
-    parallelism partitions (any real large table) passes through
-    untouched, so the spread is scale-adaptive, not a local[32] tune.
-    Same helper as operators/similarity._spread (re-exported for
-    contract queries)."""
-    from ..operators.similarity import _spread as s
-
-    return s(df)
-
-
 # ---------------------------------------------------------------------------
 # A-family: aggregations (SURVEY §2.4) — flagship pricing summary (A2-ish)
 # ---------------------------------------------------------------------------

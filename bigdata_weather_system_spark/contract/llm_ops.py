@@ -1441,7 +1441,7 @@ def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hashed (``hash='xxhash64'`` remains the cheaper production
     default — the winnowing guarantee is hash-agnostic). Coverage /
     guarantee properties additionally pinned in tests/test_llm_ops.py."""
-    from ..operators.dedup import _spread
+    from ..operators.similarity import _spread
     from ..operators.text import normalize_text, winnow_fingerprints
 
     # higher-order array lambdas run interpreted — spread the one-file scan
@@ -3361,7 +3361,7 @@ def doc_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     final rank is a single window over DOC-level rows (bounded, one per
     document) — the token-level heavy lifting never sorts globally.
     """
-    from ..operators.dedup import _spread
+    from ..operators.similarity import _spread
     from ..operators.text import tokens
 
     docs = _t(spark, sf_dir, "documents")
@@ -3756,7 +3756,7 @@ def source_shingle_similarity(
     shingle) projection scans data, and pairwise estimation is
     source-count quadratic over 128-row inputs — the sketch-algebra
     shape that prices a 1000-source matrix at pennies."""
-    from ..operators.dedup import _spread
+    from ..operators.similarity import _spread
     from ..operators.text import word_shingles
 
     d = _t(spark, sf_dir, "documents")

@@ -749,7 +749,7 @@ def token_cms_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     from ..operators.text import tokens
-    from .core import _spread
+    from ..operators.similarity import _spread
 
     d = _t(spark, sf_dir, "documents")
     # One corpus tokenization instead of three: the previous shape

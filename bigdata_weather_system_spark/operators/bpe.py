@@ -29,7 +29,7 @@ def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     corpus-sized aggregation of BPE training. The tokenize+explode
     front end is spread first (file-count-guarded): on a single-file
     corpus it would otherwise run on one core (guide §2.5)."""
-    from .dedup import _spread
+    from .similarity import _spread
     from .text import tokens
 
     return (

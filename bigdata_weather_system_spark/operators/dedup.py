@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .similarity import _spread
 from .text import normalize_text, word_shingles
 
 
@@ -57,28 +58,6 @@ def exact_dedup(
 # ---------------------------------------------------------------------------
 # N-gram Jaccard (exact set similarity — also the MinHash verify step)
 # ---------------------------------------------------------------------------
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Widen under-parallel inputs before CPU-heavy fan-out stages. Small
-    corpora arrive as a single parquet file → one partition → the
-    explode/hash pipeline runs on one core while the rest idle; the
-    pre-shuffle moves only the raw rows (cheap at that size) and
-    parallelizes everything downstream. A table whose scan already yields
-    >= session parallelism partitions (any real large table) is returned
-    untouched — an unconditional repartition would re-shuffle the whole
-    corpus for nothing.
-
-    The probe uses the scan's file listing (``inputFiles`` — plan
-    metadata, no job, no DataFrame→RDD conversion, which the previous
-    ``df.rdd.getNumPartitions()`` probe forced on every call). In-memory
-    frames (no files) are already spread across default parallelism by
-    ``createDataFrame`` and pass through untouched."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    files = df.inputFiles()
-    if not files or len(files) >= par:
-        return df
-    return df.repartition(par)
-
 
 def pair_up(
     df: DataFrame,

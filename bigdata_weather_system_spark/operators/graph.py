@@ -53,7 +53,7 @@ def cooccurrence_edges(
     still has exactly one shuffle to postings, but the set-building
     aggregation runs after it in parallel instead of before it on a
     single task. A many-file table passes through untouched (the same
-    file-count guard as ``dedup._spread``)."""
+    file-count guard as ``similarity._spread``)."""
     src = df.select(F.col(group_col).alias("_g"), F.col(item_col).alias("_i"))
     par = df.sparkSession.sparkContext.defaultParallelism
     files = df.inputFiles()

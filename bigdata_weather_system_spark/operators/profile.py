@@ -36,6 +36,13 @@ def mode_per_group(
     out_col: str | None = None,
 ) -> DataFrame:
     """Most frequent ``value_col`` per group; ties → smallest value."""
+    # Histogram + window, not Spark's ``F.mode``: plain ``F.mode`` drops
+    # NULLs, which the reference tie-break counts as a value, and on Spark
+    # 4.1.2 ``F.mode(F.struct(F.isnull(v), v), True)`` returns wrong modes
+    # once a task holds more than 128 groups (the ObjectHashAggregate
+    # sort-based fallback threshold): 9 of 1500 users were wrong on the
+    # sf0.1 ``events`` table. Pinned by
+    # ``test_mode_many_groups_ties_and_null_modes``.
     out_col = out_col or f"modal_{value_col}"
     hist = df.groupBy(*group_cols, value_col).agg(F.count(F.lit(1)).alias("_cnt"))
     w = Window.partitionBy(*group_cols).orderBy(

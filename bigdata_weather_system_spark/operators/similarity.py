@@ -28,13 +28,18 @@ from .latest import top_n_per_key
 
 
 def _spread(df: DataFrame) -> DataFrame:
-    """Repartition to session parallelism before per-pair scoring stages.
+    """Repartition to session parallelism before CPU-heavy stages (per-pair
+    scoring, tokenize / explode / hash fan-outs) that run BEFORE the
+    plan's first exchange.
 
-    Small corpora arrive as one parquet file → one partition → the scoring
-    join runs on a single core; the pre-shuffle moves only the raw vectors.
-    A table whose scan already yields >= session parallelism partitions
-    (any real large table) is returned untouched — an unconditional
-    repartition would re-shuffle every vector for nothing.
+    Small corpora arrive as one parquet file → one partition → the narrow
+    front end of the plan runs on a single core; the pre-shuffle moves
+    only the raw rows. A table whose scan already yields >= session
+    parallelism partitions (any real large table) is returned untouched —
+    an unconditional repartition would re-shuffle the corpus for nothing,
+    so the spread is scale-adaptive, not a local[32] tune. The one helper
+    for ``operators/dedup.py``, ``operators/multimodal.py``, the other
+    operators and the contract queries.
 
     The probe uses the scan's file listing (``inputFiles`` — plan
     metadata, no job, no DataFrame→RDD conversion, which the previous

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import datetime as dt
+import random
+from collections import Counter
 
 from pyspark.sql import functions as F
 
@@ -73,6 +75,40 @@ def test_mode_nulls_last(spark):
     )
     out = mode_per_group(df, ["k"], "c").collect()
     assert out[0].modal_c == "b"
+
+
+def test_mode_many_groups_ties_and_null_modes(spark):
+    """1500 groups whose rows are shuffled across every input partition,
+    so each task aggregates far more than 128 groups (the
+    ObjectHashAggregate sort-fallback threshold) and meets every group
+    both before and after the fallback. Each group holds 8–12 copies of
+    each of 0..4 and NULL, so count ties and NULL modes are common. The
+    reference is a Counter: highest count, then smallest value, NULL only
+    if it is strictly the most frequent. ``F.mode`` over
+    ``struct(isnull(v), v)`` gets tens of these groups wrong."""
+    rng = random.Random(7)
+    rows = [
+        (g, v)
+        for g in range(1500)
+        for v in (0, 1, 2, 3, 4, None)
+        for _ in range(rng.randrange(8, 13))
+    ]
+    rng.shuffle(rows)
+    df = spark.createDataFrame(rows, "k int, v int")
+
+    got = {r.k: r.modal for r in mode_per_group(df, ["k"], "v", "modal").collect()}
+    counts_of = {}
+    for g, v in rows:
+        counts_of.setdefault(g, Counter())[v] += 1
+    expected, ties = {}, 0
+    for g, counts in counts_of.items():
+        top = max(counts.values())
+        winners = [v for v, c in counts.items() if c == top]
+        non_null = [v for v in winners if v is not None]
+        expected[g] = min(non_null) if non_null else None
+        ties += len(winners) > 1
+    assert ties > 300 and sum(v is None for v in expected.values()) > 50
+    assert got == expected
 
 
 def test_bucketed_profile_hourly(spark):

@@ -115,6 +115,36 @@ def test_parquet_sink_with_checkpoint(spark, stream_dir, tmp_path):
         q.stop()
 
 
+def test_parquet_sink_commits_one_file_per_micro_batch(spark, stream_dir, tmp_path):
+    """Every serve read opens every sink file, so a micro-batch that picks
+    up k input files must still commit ONE parquet file (the file source
+    would otherwise hand each small input file its own write task)."""
+    t0 = dt.datetime(2025, 11, 14, 10, 0)
+    expected = set()
+    for i in range(6):
+        rows = [payload(f"L{j}", t0 + dt.timedelta(minutes=5 * i), 10.0 + i + j)
+                for j in range(4)]
+        write_batch(stream_dir, f"b{i}.json", rows, t0)
+        expected |= {(f"L{j}", t0 + dt.timedelta(minutes=5 * i), 10.0 + i + j)
+                     for j in range(4)}
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+
+    q = start_parquet_sink(read_event_stream(spark, "files", stream_dir), out, ckpt)
+    try:
+        q.processAllAvailable()
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+    assert len(batches) == 1, "all six input files must land in one micro-batch"
+    parts = [f for f in os.listdir(out)
+             if f.startswith("part-") and f.endswith(".parquet")]
+    assert len(parts) == 1, parts
+    got = [(r.location, r.event_timestamp, r.temperature)
+           for r in spark.read.parquet(out).collect()]
+    assert len(got) == len(expected) and set(got) == expected
+
+
 def test_streaming_hourly_profile_is_stateful_with_watermark(spark, stream_dir, tmp_path):
     t0 = dt.datetime(2025, 11, 14, 10, 0)
     write_batch(
