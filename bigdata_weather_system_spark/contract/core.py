@@ -191,7 +191,6 @@ def _profile_query(bucket_expr_fn) -> QueryFn:
             standard_metric_aggs("value"),
             mode_col="event_type",
             mode_out="modal_event_type",
-            sort=False,  # driver compare is order-insensitive; skip the range exchange
         )
 
     return fn

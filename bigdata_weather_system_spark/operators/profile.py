@@ -12,10 +12,15 @@ modal value of a categorical column with a deterministic tie-break
 tie-break is nondeterministic and would not oracle-match).
 
 Scale notes:
-- Both the metric agg and the histogram group on the bucket key, so the two
-  branches share a shuffle distribution; the final equi-join on the bucket
-  key needs no extra shuffle (outputs are already hash-partitioned on it)
-  and is broadcast-able anyway (bucket cardinality ≪ row count).
+- With a modal column the whole profile is one scan: a grouping-sets
+  aggregate over ``[bucket]`` and ``[bucket, mode_col]`` (one ``Expand``
+  under a partial ``HashAggregate``, so rows are combined map-side before
+  the only shuffle) yields the per-bucket metrics and the per-value
+  histogram together; one small re-aggregation on the bucket key then
+  picks the metrics row and the modal value. No join, so a NULL bucket is
+  just another group.
+- No presentation sort: callers that show buckets in order sort the few
+  collected rows themselves instead of paying a range exchange.
 - Bucket expressions must stay sargable (``date_trunc``/``to_date`` on a
   native timestamp, not ``date_format`` strings) so date-partitioned tables
   prune at the scan.
@@ -62,30 +67,42 @@ def bucketed_profile(
     metric_aggs: Sequence[Column],
     mode_col: str | None = None,
     mode_out: str | None = None,
-    sort: bool = True,
 ) -> DataFrame:
     """Group rows into buckets; aggregate metrics + optional modal category.
 
     ``metric_aggs`` are pre-aliased aggregate columns (e.g.
-    ``F.round(F.avg("value"), 6).alias("avg_value")``).
+    ``F.round(F.avg("value"), 6).alias("avg_value")``). Rows come out in no
+    particular order.
 
-    ``sort=False`` skips the presentation orderBy — a global range exchange
-    that pure-relational consumers (order-insensitive comparison, further
-    joins) don't need. Both agg branches group on the bucket key, so they
-    share one hash distribution and the final join is exchange-free.
+    With ``mode_col`` the output gains ``mode_out`` (default
+    ``modal_<mode_col>``): the most frequent value per bucket, ties to the
+    smallest value, NULL only when it is strictly the most frequent (the
+    ``mode_per_group`` rule). One grouping-sets aggregate computes the
+    metrics per bucket (``_g`` = 1) and a count per (bucket, value)
+    (``_g`` = 0); the re-aggregation takes each metric from the ``_g`` = 1
+    row and the mode as the ``_g`` = 0 row with the smallest
+    ``(-count, isnull, value)``.
     """
     bucketed = df.withColumn(bucket_name, bucket_expr)
-    agg = bucketed.groupBy(bucket_name).agg(*metric_aggs)
     if mode_col is None:
-        return agg.orderBy(bucket_name) if sort else agg
-    modal = mode_per_group(bucketed, [bucket_name], mode_col, mode_out)
-    # null-safe join key: a NULL bucket (null timestamps) groups into its
-    # own row on both branches, but a plain equi-join would never match it
-    # and silently drop its modal value
-    out = agg.join(
-        modal, on=agg[bucket_name].eqNullSafe(modal[bucket_name]), how="left"
-    ).drop(modal[bucket_name])
-    return out.orderBy(bucket_name) if sort else out
+        return bucketed.groupBy(bucket_name).agg(*metric_aggs)
+    mode_out = mode_out or f"modal_{mode_col}"
+    sets = bucketed.groupingSets(
+        [[bucket_name], [bucket_name, mode_col]], bucket_name, mode_col
+    ).agg(
+        *metric_aggs,
+        F.count(F.lit(1)).alias("_cnt"),
+        F.grouping(mode_col).alias("_g"),
+    )
+    internal = (bucket_name, mode_col, "_cnt", "_g")
+    metrics = [c for c in sets.columns if c not in internal]
+    rank = F.struct(
+        F.col("_g"), -F.col("_cnt"), F.isnull(mode_col), F.col(mode_col)
+    )
+    return sets.groupBy(bucket_name).agg(
+        *[F.max_by(sets[c], "_g").alias(c) for c in metrics],
+        F.min_by(mode_col, rank).alias(mode_out),
+    )
 
 
 #: Convenience bucket expressions (sargable — see module docstring).

@@ -21,7 +21,10 @@ Observable quirks preserved (SURVEY §2.11 "semantic quirks"):
 
 Scale deltas from the reference (SURVEY §4.3): no per-request ``.take(1)`` /
 ``rdd.isEmpty()`` probe jobs; sargable ``to_date`` predicates instead of
-``date_format`` strings; the 6×-pasted agg block is one parameterized call.
+``date_format`` strings; the 6×-pasted agg block is one parameterized call
+that scans the events once per profile; small results (at most a few
+hundred buckets or days) are collected unsorted and sorted on the driver,
+so no request pays a sampling job and a range exchange for its order.
 """
 
 from __future__ import annotations
@@ -73,6 +76,11 @@ def coerce_value(v):
 
 
 _DROP_KEYS = {"message", "error", "error_message"}
+
+
+def _nulls_first(v):
+    """Sort key matching an ascending ``orderBy``: NULL first, then values."""
+    return (v is not None, v)
 
 
 def row_to_record(row) -> dict:
@@ -158,10 +166,9 @@ class WeatherService:
         rows = (
             df.select(F.to_date("event_timestamp").cast("string").alias("day"))
             .distinct()
-            .orderBy("day")
             .collect()
         )
-        return [r.day for r in rows]
+        return sorted((r.day for r in rows), key=_nulls_first)
 
     def get_recent_history(self, key: str, hours: int = 24) -> list[dict]:
         """Raw rows in the trailing ``hours`` window ending at the location's
@@ -198,7 +205,7 @@ class WeatherService:
             mode_col="weathercode", mode_out="weathercode_mode",
         ).collect()
         recs = []
-        for r in out:
+        for r in sorted(out, key=lambda r: _nulls_first(r[name])):
             d = {k: v for k, v in r.asDict().items() if v is not None}
             code = d.pop("weathercode_mode", None)
             if code is not None:

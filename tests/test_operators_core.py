@@ -6,6 +6,7 @@ import datetime as dt
 import random
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_weather_system_spark.operators.latest import (
@@ -77,7 +78,23 @@ def test_mode_nulls_last(spark):
     assert out[0].modal_c == "b"
 
 
-def test_mode_many_groups_ties_and_null_modes(spark):
+def _modal_by_mode_per_group(df):
+    return {r.k: r.modal for r in mode_per_group(df, ["k"], "v", "modal").collect()}
+
+
+def _modal_by_bucketed_profile(df):
+    out = bucketed_profile(
+        df, F.col("k"), "k", [F.count(F.lit(1)).alias("n")], "v", "modal"
+    )
+    return {r.k: r.modal for r in out.collect()}
+
+
+@pytest.mark.parametrize(
+    "modal_of",
+    [_modal_by_mode_per_group, _modal_by_bucketed_profile],
+    ids=["mode_per_group", "bucketed_profile"],
+)
+def test_mode_many_groups_ties_and_null_modes(spark, modal_of):
     """1500 groups whose rows are shuffled across every input partition,
     so each task aggregates far more than 128 groups (the
     ObjectHashAggregate sort-fallback threshold) and meets every group
@@ -96,7 +113,7 @@ def test_mode_many_groups_ties_and_null_modes(spark):
     rng.shuffle(rows)
     df = spark.createDataFrame(rows, "k int, v int")
 
-    got = {r.k: r.modal for r in mode_per_group(df, ["k"], "v", "modal").collect()}
+    got = modal_of(df)
     counts_of = {}
     for g, v in rows:
         counts_of.setdefault(g, Counter())[v] += 1
@@ -109,6 +126,28 @@ def test_mode_many_groups_ties_and_null_modes(spark):
         ties += len(winners) > 1
     assert ties > 300 and sum(v is None for v in expected.values()) > 50
     assert got == expected
+
+
+def test_bucketed_profile_metric_over_mode_column(spark):
+    """A metric that aggregates the mode column itself sees every row of
+    the bucket, not the NULLed copy the grouping-sets expansion makes for
+    the per-bucket set."""
+    rows = [("a", 1), ("a", 1), ("a", 3), ("a", None), ("b", None), ("b", None)]
+    df = spark.createDataFrame(rows, "k string, v int")
+    out = bucketed_profile(
+        df,
+        F.col("k"),
+        "k",
+        [
+            F.count("v").alias("n_v"),
+            F.max("v").alias("max_v"),
+            F.count(F.lit(1)).alias("n"),
+        ],
+        "v",
+        "modal",
+    )
+    got = {r.k: (r.n_v, r.max_v, r.n, r.modal) for r in out.collect()}
+    assert got == {"a": (3, 3, 4, 1), "b": (0, None, 2, None)}
 
 
 def test_bucketed_profile_hourly(spark):
@@ -128,7 +167,7 @@ def test_bucketed_profile_hourly(spark):
         mode_out="modal",
     ).collect()
     assert len(out) == 2
-    h1, h2 = out
+    h1, h2 = sorted(out, key=lambda r: r.bucket)
     assert h1.n == 3 and h1.avg_value == 20.0 and h1.modal == "v"
     assert h2.n == 1 and h2.modal == "w"
 

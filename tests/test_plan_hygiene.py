@@ -58,12 +58,18 @@ def test_latest_per_key_uses_window_group_limit(spark):
     assert plan.count("WindowGroupLimit") >= 2  # Partial + Final
 
 
-def test_profile_branches_share_distribution(spark):
+def test_profile_is_one_partially_aggregated_scan(spark):
     plan = plan_of(spark, "hourly_profile")
-    # modal join must be broadcast (bucket cardinality << rows), never SMJ
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # contract variant skips the presentation sort → no range exchange
+    # metrics and the mode histogram come from one grouping-sets aggregate
+    # over one scan: Expand feeds a partial aggregate below the first
+    # exchange, and no join puts a second scan of the input back
+    lines = plan.splitlines()
+    first_exchange = max(i for i, l in enumerate(lines) if "Exchange" in l)
+    below = "\n".join(lines[first_exchange + 1 :])
+    assert plan.count("FileScan") == 1 and "FileScan" in below
+    assert "Expand" in below and "partial_" in below
+    assert "Join" not in plan
+    # no presentation sort → no range exchange
     assert "rangepartitioning" not in plan
 
 
